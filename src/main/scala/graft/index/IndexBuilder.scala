@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
   *
   * Stages (each checkpointable via [[Manifest]]):
   *   1. docids   — deterministic dense docId = global rank over (repo,path)
-  *   2. docstore — (docId, repo, path, commit, lang, sha256, content)
-  *   3. doclen   — (docId, len, lenByte) + avg scalar
-  *   4. postings — term-partitioned, salted for hot terms, block-encoded
-  *   5. termstats— (term, df, cf) aggregated from block METADATA (Σn, ΣsumTf)
+  *   2. docstore — (docId, repo, path, commit, lang, sha256, content, len,
+  *                 lenByte)
+  *   3. postings — term-partitioned, salted for hot terms, block-encoded,
+  *                 with the inline per-posting norm stream
+  *   4. superblocks — coarse (term, lo, hi) metadata with df/cf partials
+  *   5. termstats— (term, df, cf) summed from the superblock partials
   *
   * Scale design: the only required shuffles are (a) the range-sort for docId
   * assignment, (b) the term(+salt) repartition for posting-list grouping,
@@ -29,9 +31,8 @@ object IndexBuilder {
   final case class DocRow(docId: Int, repo: String, path: String, commit: String,
                           lang: String, sha256: String, content: String)
   /** Docstore row: [[DocRow]] plus the doc-length columns. Storing len /
-    * lenByte IN the docstore makes the former `doclen/` stage a pure
-    * columnar projection (parquet reads exactly 3 small columns), removing
-    * one full tokenize pass + write + commit from the build. */
+    * lenByte IN the docstore makes doc lengths a pure columnar projection
+    * (parquet reads exactly 3 small columns). */
   final case class StoredDoc(docId: Int, repo: String, path: String, commit: String,
                              lang: String, sha256: String, content: String,
                              len: Int, lenByte: Int)
@@ -240,8 +241,8 @@ object IndexBuilder {
               }
               // runs from contiguous-docId input partitions are disjoint and
               // already firstDocId-sorted → plain concatenation; inputs that
-              // went through an upstream shuffle (e.g. compaction's doclen
-              // join) can interleave → k-way merge keeps docIds strictly
+              // went through an upstream shuffle (e.g. compaction's
+              // tombstone anti-join) can interleave → k-way merge keeps docIds strictly
               // ascending either way
               val sorted = runs.sortBy(_.firstDocId)
               val disjoint = sorted.iterator.sliding(2).forall(w =>
@@ -299,7 +300,7 @@ object IndexBuilder {
     * default salt threshold (df 8192) still draws ~256 sampled docs. */
   val HotSampleMod = 32
 
-  /** Full build: writes docstore/, doclen/, postings/, termstats/ under
+  /** Full build: writes docstore/, postings/, superblocks/, termstats/ under
     * `indexDir`, with a manifest per stage + a snapshot manifest.
     * Resumable: committed stages are skipped on re-run.
     *
@@ -327,74 +328,58 @@ object IndexBuilder {
         Tokenizer.tokenizeText(Tokenizer.stripHtml(content), fold = true).map(_.term)
       else if (textAnalyzer) Tokenizer.tokenizeText(content).map(_.term)
       else Tokenizer.terms(content)
-    val profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (profile) println(f"BUILD_STAGE $name%-10s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-
     var docsInMem: Option[Dataset[DocRow]] = None
     var docsRelease: () => Unit = () => ()
-    timed("docstore") { if (!Manifest.isCommitted(indexDir, "docstore")) {
-      val (docs, release) = timed("docstore.assign") {
-        assignDocIdsPersisted(spark, corpus, partitions)
-      }
+    if (!Manifest.isCommitted(indexDir, "docstore")) {
+      val (docs, release) = assignDocIdsPersisted(spark, corpus, partitions)
       // doc lengths are computed in the SAME map as the docstore write (one
       // tokenize ride on the write pass; no separate doclen stage/job)
-      timed("docstore.write") {
-        docs.map { d =>
-          val len = analyzedTerms(d.content).length
-          StoredDoc(d.docId, d.repo, d.path, d.commit, d.lang, d.sha256, d.content,
-            len, LenByte.encode(len.toLong))
-        }.write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/docstore")
-      }
+      docs.map { d =>
+        val len = analyzedTerms(d.content).length
+        StoredDoc(d.docId, d.repo, d.path, d.commit, d.lang, d.sha256, d.content,
+          len, LenByte.encode(len.toLong))
+      }.write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/docstore")
       docsInMem = Some(docs) // still persisted — the tokenize passes reuse it
       docsRelease = release
-      timed("docstore.commit") { Manifest.commit(spark, indexDir, "docstore") }
-    }}
+      Manifest.commit(spark, indexDir, "docstore")
+    }
     val docstore = docsInMem.getOrElse(spark.read.parquet(s"$indexDir/docstore").as[DocRow])
 
     val nDocs = Manifest.stageRows(indexDir, "docstore")
       .getOrElse(spark.read.parquet(s"$indexDir/docstore").count())
-    timed("postings") { if (!Manifest.isCommitted(indexDir, "postings")) {
+    if (!Manifest.isCommitted(indexDir, "postings")) {
       // sampled hot-term pass: unique terms of every HotSampleMod-th doc →
       // per-term doc counts (map-side combined); df estimates scale back
       // up. ONE job returns both the hot list and the total estimate.
-      val (hot, totalPostings) = timed("postings.hot") {
-        val row = docstore
-          .filter($"docId" % HotSampleMod === 0)
-          .flatMap(d => analyzedTerms(d.content).distinct.iterator)
-          .groupBy("value").agg(count(lit(1)).as("c"))
-          .agg(sum($"c").as("total"),
-            collect_list(when($"c" * HotSampleMod > SaltTarget,
-              struct($"value", $"c"))).as("hotRows"))
-          .as[(Long, Seq[(String, Long)])]
-          .head()
-        val h = row._2.map { case (t, c) =>
-          val df = c * HotSampleMod
-          val shards = math.ceil(df.toDouble / SaltTarget).toLong
-          t -> math.max(1L, math.ceil(nDocs.toDouble / shards).toLong)
-        }.toMap
-        (h, row._1 * HotSampleMod)
-      }
+      val row = docstore
+        .filter($"docId" % HotSampleMod === 0)
+        .flatMap(d => analyzedTerms(d.content).distinct.iterator)
+        .groupBy("value").agg(count(lit(1)).as("c"))
+        .agg(sum($"c").as("total"),
+          collect_list(when($"c" * HotSampleMod > SaltTarget,
+            struct($"value", $"c"))).as("hotRows"))
+        .as[(Long, Seq[(String, Long)])]
+        .head()
+      val hot = row._2.map { case (t, c) =>
+        val df = c * HotSampleMod
+        val shards = math.ceil(df.toDouble / SaltTarget).toLong
+        t -> math.max(1L, math.ceil(nDocs.toDouble / shards).toLong)
+      }.toMap
+      val totalPostings = row._1 * HotSampleMod
       // partition count sized by data, not cores: each sort partition holds
       // ~PostingsPerPartition postings so the per-task sort never spills and
       // cores stay saturated with 2-4 waves (the 100 TB knob — at cluster
       // scale this grows into the tens of thousands of partitions)
       val blockParts = math.min(4096L,
         math.max(partitions.toLong, totalPostings / PostingsPerPartition)).toInt
-      if (profile) println(s"BUILD_STAGE postings.parts $blockParts (est $totalPostings postings)")
-      timed("postings.enc") {
-        buildBlocksWithSpans(spark,
-          flatPostings(docstore, codeAnalyzer, textAnalyzer, textFold), hot, blockParts)
-          .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/postings")
-      }
-      timed("postings.commit") { Manifest.commit(spark, indexDir, "postings") }
-    }}
+      buildBlocksWithSpans(spark,
+        flatPostings(docstore, codeAnalyzer, textAnalyzer, textFold), hot, blockParts)
+        .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/postings")
+      Manifest.commit(spark, indexDir, "postings")
+    }
     docsRelease() // last consumer of the cached sorted corpus
 
-    timed("superblocks") { if (!Manifest.isCommitted(indexDir, "superblocks")) {
+    if (!Manifest.isCommitted(indexDir, "superblocks")) {
       // persisted COARSE block metadata ([[graft.query.MetaStore]]'s
       // two-level fetch): one (term, lo, hi) row per docId super-bucket of
       // ~128 blocks, so a cold hot-term plan reads O(df/16384) precomputed
@@ -407,32 +392,22 @@ object IndexBuilder {
       // both stats stages, one fewer fixed-cost job on the build's
       // critical path (the N→4N scaling criterion is knife-edged on
       // exactly these serial tails).
-      timed("superblocks.agg") {
-        superBlockRows(spark.read.parquet(s"$indexDir/postings"),
-            math.max(1, partitions / 4))
-          .write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$indexDir/superblocks")
-      }
-      timed("superblocks.commit") { Manifest.commit(spark, indexDir, "superblocks") }
-    }}
+      superBlockRows(spark.read.parquet(s"$indexDir/postings"),
+          math.max(1, partitions / 4))
+        .write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$indexDir/superblocks")
+      Manifest.commit(spark, indexDir, "superblocks")
+    }
 
-    timed("termstats") { if (!Manifest.isCommitted(indexDir, "termstats")) {
-      // per-term df/cf, summed from the superblock partials when the stage
-      // carries them (current layout) — input is ~vocab-sized, not
-      // block-count-sized; a pre-partial-column superblocks stage (resumed
-      // older build) falls back to the full block-metadata aggregation
-      val sb = spark.read.parquet(s"$indexDir/superblocks")
-      val src =
-        if (sb.columns.contains("df")) sb.select($"term", $"df", $"cf")
-        else spark.read.parquet(s"$indexDir/postings")
-          .select($"term", $"n".cast("long").as("df"), $"sumTf".cast("long").as("cf"))
-      timed("termstats.agg") {
-        src.groupBy("term")
-          .agg(sum($"df").cast("long").as("df"), sum($"cf").cast("long").as("cf"))
-          .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/termstats")
-      }
-      timed("termstats.commit") { Manifest.commit(spark, indexDir, "termstats") }
-    }}
+    if (!Manifest.isCommitted(indexDir, "termstats")) {
+      // per-term df/cf, summed from the superblock partials — input is
+      // ~vocab-sized, not block-count-sized
+      spark.read.parquet(s"$indexDir/superblocks")
+        .groupBy("term")
+        .agg(sum($"df").cast("long").as("df"), sum($"cf").cast("long").as("cf"))
+        .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/termstats")
+      Manifest.commit(spark, indexDir, "termstats")
+    }
     Manifest.commitSnapshot(spark, indexDir, nDocs)
   }
 

@@ -68,6 +68,30 @@ object Manifest {
     } catch { case _: Throwable => -1L }
   }
 
+  /** Column names of `stage`'s parquet schema, one set per part-file
+    * directory — the stage dir itself, or one `seg=<id>` dir per id in
+    * `segs` for a segmented index — read from the first part file's footer
+    * on the driver (no job). A directory without part files contributes
+    * nothing. */
+  def stageColumns(indexDir: String, stage: String, segs: Seq[Long]): Seq[Set[String]] = {
+    import scala.jdk.CollectionConverters._
+    val dirs =
+      if (segs.isEmpty) Seq(Paths.get(indexDir, stage))
+      else segs.map(s => Paths.get(indexDir, stage, s"seg=$s"))
+    dirs.filter(Files.isDirectory(_)).flatMap { d =>
+      val ls = Files.list(d)
+      val first = try ls.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet"))
+        finally ls.close()
+      first.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
+        try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+        finally r.close()
+      }
+    }
+  }
+
   /** Total committed rows of a stage, from its manifest (no job). */
   def stageRows(indexDir: String, stage: String): Option[Long] = {
     if (!isCommitted(indexDir, stage)) None

@@ -161,9 +161,15 @@ object BlockMax {
     picked.sortBy(_._1).toArray
   }
 
-  /** Per-query pruning diagnostics (driver-side counts + executor-side
-    * decoded-posting accumulator value, captured after the job). */
-  final case class Diag(nTerms: Int, totalBlocks: Long, totalPostings: Long,
-                        afterRangeBlocks: Long, afterThetaBlocks: Long,
-                        decodedPostings: Long, theta: Double, usedWand: Boolean)
+  /** Pruning diagnostics of one batched search call, batch totals over its
+    * live queries and their distinct terms: block metadata rows and the
+    * postings they hold, distinct blocks surviving range pruning and then
+    * the θ-prune, postings decoded by the WAND pilot and by the main job,
+    * and the number of queries that ran the pilot. */
+  final case class Diag(nQueries: Int, nTerms: Int, totalBlocks: Long,
+                        totalPostings: Long, afterRangeBlocks: Long,
+                        afterThetaBlocks: Long, pilotPostings: Long,
+                        decodedPostings: Long, wandQueries: Int) {
+    def usedWand: Boolean = wandQueries > 0
+  }
 }

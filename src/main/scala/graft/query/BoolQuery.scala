@@ -1,7 +1,6 @@
 package graft.query
 
 import graft.core.{Bm25, Tokenizer}
-import graft.index.PostingCodec
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -27,14 +26,14 @@ import org.apache.spark.sql.functions._
   *     intersects its positive children's coverage, OR unions — bounding
   *     which blocks decode (a rare clause prunes its AND-siblings' hot
   *     lists, same J3 skip analog as [[Searcher.search]]);
-  *  3. decode every leaf term's surviving blocks once; per doc, aggregate a
-  *     presence BITMASK (each (term, doc) posting is unique, so a sum of
-  *     2^leafBit is an exact mask) plus one pivoted partial-score column
-  *     per positive leaf (boolean queries are narrow — ≤ 62 leaves by
-  *     construction — so the pivot stays cheap, unlike a 64-slot batch);
-  *  4. predicate AND score both compile to pure codegen Columns over the
-  *     mask and the pivot: the score expression adds in fixed tree order,
-  *     bitwise-deterministic and mirrored term-for-term by the SQL oracle.
+  *  3. decode every leaf term's surviving blocks once; per (query, doc),
+  *     aggregate a presence BITMASK (each (term, doc) posting is unique, so
+  *     a sum of 2^leafBit is an exact mask — ≤ 62 leaves by construction)
+  *     plus the positive leaves' (slot, partial) pairs;
+  *  4. the shared evaluator ([[evalAndScore]]) decides the match and adds
+  *     the clause-aware score in fixed tree order — bitwise-deterministic,
+  *     identical on the resident path, and mirrored term-for-term by the
+  *     SQL oracle.
   */
 object BoolQuery {
 
@@ -150,9 +149,9 @@ object BoolQuery {
   /** Shared recursive evaluator: (matched, clause-aware score). `partial`
     * returns a positive leaf's BM25 partial for the CURRENT doc (only
     * consulted for present positive leaves). Additions happen in tree
-    * order via foldLeft(0.0) — bitwise-identical to the Column form's
+    * order via foldLeft(0.0) — bitwise-identical to the SQL oracle's
     * left-assoc sum (x + 0.0 == x for every non-negative partial), so the
-    * distributed, batched, and resident paths all produce the same bits. */
+    * distributed and resident paths produce the same bits. */
   private[graft] def evalAndScore(n: Node, present: String => Boolean,
                                   partial: String => Double): (Boolean, Double) = n match {
     case Term(t) =>
@@ -284,32 +283,6 @@ object BoolQuery {
     (pos.toSeq, (neg -- pos).toSeq)
   }
 
-  // ---- interval algebra over disjoint ascending (first, last) arrays ----
-  private def intersectIv(a: Array[(Int, Int)], b: Array[(Int, Int)]): Array[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuilder.make[(Int, Int)]
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val lo = math.max(a(i)._1, b(j)._1)
-      val hi = math.min(a(i)._2, b(j)._2)
-      if (lo <= hi) out += ((lo, hi))
-      if (a(i)._2 < b(j)._2) i += 1 else j += 1
-    }
-    out.result()
-  }
-
-  private def unionIv(ivs: Seq[Array[(Int, Int)]]): Array[(Int, Int)] = {
-    val all = ivs.flatten.sortBy(_._1)
-    if (all.isEmpty) return Array.empty
-    val out = scala.collection.mutable.ArrayBuffer(all.head)
-    all.tail.foreach { case (lo, hi) =>
-      val (plo, phi) = out.last
-      if (lo <= phi + 1) { if (hi > phi) out(out.length - 1) = (plo, hi) }
-      else out += ((lo, hi))
-    }
-    out.toArray
-  }
-
   /** Candidate docId coverage of a folded tree: any matching doc lies
     * inside (AND intersects positive children, OR unions children, NOT
     * never restricts). */
@@ -319,52 +292,19 @@ object BoolQuery {
       case And(cs) =>
         cs.filter(hasPositive).map(coverage(_, ranges)) match {
           case Seq()       => Array.empty
-          case head +: tail => tail.foldLeft(head)(intersectIv)
+          case head +: tail => tail.foldLeft(head)(MetaStore.intersectIv)
         }
-      case Or(cs) => unionIv(cs.map(coverage(_, ranges)))
+      case Or(cs) => MetaStore.unionIv(cs.map(coverage(_, ranges)))
       case Not(_) => Array.empty // only reachable for pure-negative trees
       case _      => Array.empty
     }
 
-  /** Compile the folded predicate to a codegen Column over the presence
-    * bitmask (leaf bit positions from `bitOf`). */
-  private def predicate(n: Node, mask: org.apache.spark.sql.Column,
-                        bitOf: Map[String, Int]): org.apache.spark.sql.Column = n match {
-    case Term(t) => mask.bitwiseAND(lit(1L << bitOf(t))) =!= 0L
-    case Not(c)  => !predicate(c, mask, bitOf)
-    case And(cs) => cs.map(predicate(_, mask, bitOf)).reduceLeft(_ && _)
-    case Or(cs)  => cs.map(predicate(_, mask, bitOf)).reduceLeft(_ || _)
-    case True    => lit(true)
-    case _       => lit(false)
-  }
-
-  /** Clause-aware Lucene scoring as a codegen Column over the presence
-    * mask and the per-leaf partial-score pivot (`_p<slot>`): a node
-    * contributes only when it MATCHES — a matched AND adds all children, a
-    * matched OR its matching children, NOT nothing. Additions happen in
-    * fixed tree order (bitwise-deterministic; the SQL oracle mirrors the
-    * same CASE tree term for term). */
-  private def scoreExpr(n: Node, mask: org.apache.spark.sql.Column,
-                        bitOf: Map[String, Int],
-                        slotOf: Map[String, Int]): org.apache.spark.sql.Column = n match {
-    case Term(t) =>
-      slotOf.get(t).map(i => coalesce(col(s"_p$i"), lit(0.0))).getOrElse(lit(0.0))
-    case Not(_) => lit(0.0)
-    case And(cs) =>
-      when(predicate(n, mask, bitOf),
-        cs.map(scoreExpr(_, mask, bitOf, slotOf)).reduceLeft(_ + _)).otherwise(lit(0.0))
-    case Or(cs) =>
-      when(predicate(n, mask, bitOf),
-        cs.map(scoreExpr(_, mask, bitOf, slotOf)).reduceLeft(_ + _)).otherwise(lit(0.0))
-    case _ => lit(0.0)
-  }
-
   /** Batched boolean search: every boolean query of a log in ONE Spark job
-    * (the [[Searcher.searchAll]] analog). Same semantics as [[search]] per
-    * query; the per-(query, doc) (mask, slot partials) aggregate feeds the
-    * SHARED recursive evaluator ([[evalAndScore]]) executor-side with the
-    * broadcast folded trees — scores bitwise-identical to the single-query
-    * Column form. Returns (queryId, rank, docId, score). */
+    * (the [[Searcher.searchAll]] analog, and the only boolean pipeline —
+    * [[search]] is a one-query call of it). The per-(query, doc) (mask,
+    * slot partials) aggregate feeds the SHARED recursive evaluator
+    * ([[evalAndScore]]) executor-side with the broadcast folded trees.
+    * Returns (queryId, rank, docId, score). */
   def searchAll(ix: Searcher.LoadedIndex, queries: Seq[(Int, Node)],
                 k: Int): DataFrame = {
     val spark = ix.spark
@@ -452,17 +392,8 @@ object BoolQuery {
         if (matched) Iterator.single((qid, docId, score)) else Iterator.empty
       }
       .toDF("queryId", "docId", "score")
-    val withDel = ix.tombstones
-      .map(d => scored.join(d, Seq("docId"), "left_anti")).getOrElse(scored)
-    withDel
-      .as[(Int, Int, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(new TopKAggregator(k).toColumn)
-      .flatMap { case (qid, top) =>
-        top.iterator.zipWithIndex.map { case ((d, s), i) => (qid, i + 1, d, s) }
-      }
-      .toDF("queryId", "rank", "docId", "score")
+    Searcher.topKRows(ix.tombstones
+      .map(d => scored.join(d, Seq("docId"), "left_anti")).getOrElse(scored), k)
   }
 
   /** Boolean BM25 top-k over the index (see object doc for the contract).
@@ -470,69 +401,6 @@ object BoolQuery {
   def search(ix: Searcher.LoadedIndex, query: String, k: Int): Dataset[Searcher.Hit] =
     search(ix, parse(query), k)
 
-  def search(ix: Searcher.LoadedIndex, root0: Node, k: Int): Dataset[Searcher.Hit] = {
-    val spark = ix.spark
-    import spark.implicits._
-    if (k <= 0) return spark.emptyDataset[Searcher.Hit]
-    val (pos0, neg0) = leafTerms(root0)
-    val all0 = (pos0 ++ neg0).distinct
-    if (all0.isEmpty) return spark.emptyDataset[Searcher.Hit]
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(all0: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
-    val root = fold(root0, dfs.contains)
-    if (root == False || root == True || !hasPositive(root))
-      return spark.emptyDataset[Searcher.Hit]
-    val (posTerms, negTerms) = leafTerms(root)
-    val allTerms = (posTerms ++ negTerms).distinct
-    val blocks = ix.postings.filter($"term".isin(allTerms: _*))
-    val metaRaw = MetaStore.fineMetaBy(ix, blocks, allTerms, dfs)(covMap =>
-      coverage(root, covMap))
-    val ranges: Map[String, Array[(Int, Int)]] = metaRaw.groupBy(_._1)
-      .map { case (t, rs) => t -> rs.sortBy(_._2).map(r => (r._2, r._3)) }
-    val cov = coverage(root, ranges)
-    if (cov.isEmpty) return spark.emptyDataset[Searcher.Hit]
-    // every leaf (positive AND negative) decodes only blocks overlapping the
-    // tree's coverage: presence flags are complete for all candidate docs
-    val keys: Set[(String, Int)] = allTerms.iterator.flatMap { t =>
-      val m = ranges.getOrElse(t, Array.empty[(Int, Int)])
-        .map(r => BlockMax.BlockMeta(r._1, r._2, 0, 0.0))
-      BlockMax.overlapping(m, cov).iterator.map(i => (t, m(i).first))
-    }.toSet
-    if (keys.isEmpty) return spark.emptyDataset[Searcher.Hit]
-    val bitOf: Map[String, Int] = allTerms.zipWithIndex.toMap
-    require(allTerms.size <= 62, "boolean query exceeds 62 distinct terms")
-    val slotOf: Map[String, Int] = posTerms.zipWithIndex.toMap
-    val idfs = dfs.map { case (t, d) => t -> Bm25.idf(ix.nDocs, d) }
-    val leafDf = broadcast(allTerms.map { t =>
-      (t, 1L << bitOf(t), slotOf.getOrElse(t, -1), idfs.getOrElse(t, 0.0))
-    }.toDF("term", "bit", "slot", "idf"))
-    val cacheLit = array(ix.lossyCache.map(lit).toSeq: _*)
-    val partScore = $"idf" *
-      ($"tf" * lit(Bm25.K1 + 1.0) / ($"tf" + element_at(cacheLit, $"lenByte" + 1)))
-    val decoded = Searcher.decodedScoreRows(ix, blocks
-      .join(broadcast(keys.toSeq.toDF("term", "firstDocId")),
-        Seq("term", "firstDocId"), "left_semi"))
-    // each (term, doc) posting is unique → the bit sum is an exact mask and
-    // each positive leaf's max(when(...)) pivot holds its single partial
-    val pivots = posTerms.zipWithIndex.map { case (t, i) =>
-      max(when($"term" === t, $"partScore")).as(s"_p$i")
-    }
-    val agg = decoded
-      .join(leafDf, "term")
-      .withColumn("partScore", partScore)
-      .groupBy($"docId")
-      .agg(sum($"bit").as("mask"), pivots: _*)
-      .withColumn("score", scoreExpr(root, $"mask", bitOf, slotOf))
-      .filter(predicate(root, $"mask", bitOf))
-    val withDel = ix.tombstones
-      .map(d => agg.join(d, Seq("docId"), "left_anti")).getOrElse(agg)
-    val hits = withDel
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
-      .select($"docId".cast("int"), $"score")
-      .as[(Int, Double)].collect()
-      .zipWithIndex.map { case ((d, s), i) => Searcher.Hit(d, s, i + 1) }
-    hits.toSeq.toDS()
-  }
+  def search(ix: Searcher.LoadedIndex, root: Node, k: Int): Dataset[Searcher.Hit] =
+    Searcher.hitsOf(searchAll(ix, Seq(0 -> root), k))
 }

@@ -294,23 +294,42 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     // EngineSpec). Cheap queries stay on the caller thread: below the
     // threshold the split overhead exceeds the scan.
     val (aScore, aDoc) = after.getOrElse((Double.PositiveInfinity, -1))
-    val minN = slots.map(_.n).min
+    // exact-phrase shifts, built once per query: explicit ones, else 0..n-1
+    // (plain adjacency); null for a proximity (slop > 0) or term query
+    val shifts: Array[Int] =
+      if (!phrase || slop > 0) null
+      else phraseShifts.fold(Array.range(0, slots.size))(_.toArray)
+    val small = slots.minBy(_.n)
+    splitScan(small.n.toLong, small.docIds, small.n, Int.MaxValue, k) { (lo, hi) =>
+      scanRange(slots, idfs, lenBytes, k, phrase, lo, hi, exAll, slop,
+        aScore, aDoc, shifts)
+    }
+  }
+
+  /** Run `scan` over the docId domain `[0, end)`: on the caller thread when
+    * `total` postings are below the scan threshold, else split at
+    * equal-count boundaries of the sorted list `ids` (its first `n`
+    * entries), one range per core of [[LocalService.scanPool]], merging the
+    * per-range heaps by the global (score desc, docId asc) order. Per-doc
+    * scores are range-independent, so the merge is bitwise-identical to the
+    * sequential scan (asserted in EngineSpec). Every task FINISHES before a
+    * failure propagates: a worker still writing its range of a shared
+    * buffer during the caller's cleanup would leave residue behind. */
+  private def splitScan(total: Long, ids: Array[Int], n: Int, end: Int, k: Int)
+                       (scan: (Int, Int) => Seq[Oracle.Hit]): Seq[Oracle.Hit] = {
     val w = LocalService.scanParallelism
-    if (minN < math.max(scanThreshold, w) || w < 2)
-      scanRange(slots, idfs, lenBytes, k, phrase, 0, Int.MaxValue, exAll, slop,
-        aScore, aDoc, phraseShifts)
+    if (total < math.max(scanThreshold.toLong, w.toLong) || w < 2) scan(0, end)
     else {
-      val small = slots.minBy(_.n)
-      val bounds = (1 until w).map(i => small.docIds((small.n.toLong * i / w).toInt))
-      val ranges = (0 +: bounds).zip(bounds :+ Int.MaxValue)
+      val bounds = (1 until w).map(i => ids((n.toLong * i / w).toInt))
+      val ranges = (0 +: bounds).zip(bounds :+ end)
       val tasks = ranges.map { case (lo, hi) =>
         LocalService.scanPool.submit(new java.util.concurrent.Callable[Seq[Oracle.Hit]] {
-          def call(): Seq[Oracle.Hit] =
-            scanRange(slots, idfs, lenBytes, k, phrase, lo, hi, exAll, slop,
-              aScore, aDoc, phraseShifts)
+          def call(): Seq[Oracle.Hit] = scan(lo, hi)
         })
       }
-      tasks.flatMap(_.get()).sortBy(h => (-h.score, h.docId)).take(k)
+      // Try first: wait for all, then rethrow the first failure
+      tasks.map(t => scala.util.Try(t.get())).flatMap(_.get)
+        .sortBy(h => (-h.score, h.docId)).take(k)
     }
   }
 
@@ -414,8 +433,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
                         slop: Int = 0,
                         afterScore: Double = Double.PositiveInfinity,
                         afterDocId: Int = -1,
-                        phraseShifts: Option[Seq[Int]] = None): Seq[Oracle.Hit] = {
-    val shiftsArr: Array[Int] = phraseShifts.map(_.toArray).orNull
+                        shifts: Array[Int] = null): Seq[Oracle.Hit] = {
     val nL = slots.size
     val cursors = new Array[Int](nL)
     // exclusion membership: one binary search per EXCLUSION LIST per aligned
@@ -449,7 +467,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
       j0 += 1
     }
     val posBuf = new Array[Array[Int]](nL)      // reused per candidate doc
-    val posCursors = new Array[Int](nL)         // phraseAdjacent scratch
+    val posCursors = new Array[Int](nL)         // phraseAtShifts scratch
     val heap = scala.collection.mutable.PriorityQueue.empty[Oracle.Hit](
       Ordering.by[Oracle.Hit, (Double, Int)](h => (-h.score, h.docId))) // head = worst kept
     var done = false
@@ -472,9 +490,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
           val ok = !excluded(maxDoc) && (!phrase || {
             var j = 0
             while (j < nL) { posBuf(j) = slots(j).positions(cursors(j)); j += 1 }
-            if (shiftsArr != null)
-              LocalService.phraseAtShifts(posBuf, posCursors, shiftsArr)
-            else if (slop == 0) LocalService.phraseAdjacent(posBuf, posCursors)
+            if (shifts != null) LocalService.phraseAtShifts(posBuf, posCursors, shifts)
             else graft.core.Oracle.proximityMatch(
               scala.collection.immutable.ArraySeq.unsafeWrapArray(posBuf), slop)
           })
@@ -711,29 +727,11 @@ final class LocalService(val ix: Searcher.LoadedIndex,
                          k: Int): Seq[Oracle.Hit] = {
     val scores = scoreBuf.get()
     val idfs = lists.map(tl => Bm25.idf(ix.nDocs, tl.n.toLong)).toArray
-    val w = LocalService.scanParallelism
-    val total = lists.foldLeft(0L)(_ + _.n)
-    try {
-      if (total < math.max(scanThreshold.toLong, w.toLong) || w < 2)
-        denseRange(lists, idfs, lenBytes, scores, k, 0, scores.length)
-      else {
-        val big = lists.maxBy(_.n)
-        val bounds = (1 until w).map(i => big.docIds((big.n.toLong * i / w).toInt))
-        val ranges = (0 +: bounds).zip(bounds :+ scores.length)
-        val tasks = ranges.map { case (lo, hi) =>
-          LocalService.scanPool.submit(new java.util.concurrent.Callable[Seq[Oracle.Hit]] {
-            def call(): Seq[Oracle.Hit] = denseRange(lists, idfs, lenBytes, scores, k, lo, hi)
-          })
-        }
-        // every task must FINISH (not just fail fast) before any cleanup:
-        // a worker still writing its segment during a reset would leave
-        // residue for the next query on this thread's buffer
-        val done = tasks.map(t => scala.util.Try(t.get()))
-        done.collectFirst { case scala.util.Failure(e) => e } match {
-          case Some(e) => throw e // outer catch resets the (quiescent) buffer
-          case None => done.flatMap(_.get).sortBy(h => (-h.score, h.docId)).take(k)
-        }
-      }
+    val big = lists.maxBy(_.n)
+    // splitScan returns only after every range task finished, so a failure
+    // resets a quiescent buffer
+    try splitScan(lists.foldLeft(0L)(_ + _.n), big.docIds, big.n, scores.length, k) {
+      (lo, hi) => denseRange(lists, idfs, lenBytes, scores, k, lo, hi)
     } catch {
       case t: Throwable => java.util.Arrays.fill(scores, 0.0); throw t
     }
@@ -988,23 +986,10 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     }
 
     // heavy unions split the docId domain at equal-count boundaries of the
-    // largest positive list, one disjoint range per core (same split rule
-    // as scoreDense; per-doc independence makes the merge exact)
-    val w = LocalService.scanParallelism
-    val total = posNs.foldLeft(0L)(_ + _.toLong)
-    if (total < math.max(scanThreshold.toLong, w.toLong) || w < 2)
-      scanRange(0, Int.MaxValue)
-    else {
-      val big = posNs.indices.maxBy(posNs)
-      val bounds = (1 until w).map(i => posDocs(big)((posNs(big).toLong * i / w).toInt))
-      val ranges = (0 +: bounds).zip(bounds :+ Int.MaxValue)
-      val tasks = ranges.map { case (lo, hi) =>
-        LocalService.scanPool.submit(new java.util.concurrent.Callable[Seq[Oracle.Hit]] {
-          def call(): Seq[Oracle.Hit] = scanRange(lo, hi)
-        })
-      }
-      tasks.flatMap(_.get()).sortBy(h => (-h.score, h.docId)).take(k)
-    }
+    // largest positive list, one disjoint range per core
+    val big = posNs.indices.maxBy(posNs)
+    splitScan(posNs.foldLeft(0L)(_ + _.toLong), posDocs(big), posNs(big), Int.MaxValue,
+      k)(scanRange)
   }
 
   /** Search reply WITH highlighted snippets — the reference's serving shape
@@ -1102,17 +1087,13 @@ object LocalService {
     java.util.concurrent.Executors.newWorkStealingPool(
       Runtime.getRuntime.availableProcessors())
 
-  /** Allocation-free adjusted-position adjacency: does a position p exist in
-    * slot 0 with p+i present in every slot i? Same semantics as
-    * `Oracle.phraseMatch` (shifted intersection non-empty,
-    * `query_processing.h:335-362`), but a merge-scan over the sorted
-    * position arrays — the hot phrase path evaluates this once per
+  /** Allocation-free adjusted-position match with EXPLICIT per-slot
+    * shifts: slot j must hold `p - shifts(0) + shifts(j)` for some p in
+    * slot 0 — `shifts = 0..n-1` is plain adjacency (`Oracle.phraseMatch`,
+    * `query_processing.h:335-362`), gapped shifts are the analyzed query's
+    * position gaps (Lucene match_phrase semantics). A merge-scan over the
+    * sorted position arrays: the hot phrase path evaluates this once per
     * candidate doc, where a Set-based intersection would allocate. */
-  /** [[phraseAdjacent]] generalized to EXPLICIT per-slot shifts (the
-    * analyzed query's position gaps — Lucene match_phrase semantics):
-    * slot j must hold `p - shifts(0) + shifts(j)` for some p in slot 0.
-    * Same allocation-free merge-scan; `shifts = 0..k-1` degenerates to
-    * plain adjacency. */
   private[query] def phraseAtShifts(lists: Array[Array[Int]],
                                     cursors: Array[Int],
                                     shifts: Array[Int]): Boolean = {
@@ -1132,38 +1113,6 @@ object LocalService {
       var ok = true
       while (j < lists.length && ok) {
         val target = p - shifts(0) + shifts(j)
-        val arr = lists(j)
-        var c = cursors(j)
-        while (c < arr.length && arr(c) < target) c += 1
-        cursors(j) = c
-        if (c >= arr.length) return false // later p only raises the target
-        ok = arr(c) == target
-        j += 1
-      }
-      if (ok) return true
-      ci += 1
-    }
-    false
-  }
-
-  private[query] def phraseAdjacent(lists: Array[Array[Int]],
-                                    cursors: Array[Int]): Boolean = {
-    if (lists.isEmpty) return false
-    var e = 0
-    while (e < lists.length) {
-      if (lists(e).length == 0) return false
-      cursors(e) = 0
-      e += 1
-    }
-    if (lists.length == 1) return true
-    val first = lists(0)
-    var ci = 0
-    while (ci < first.length) {
-      val p = first(ci)
-      var j = 1
-      var ok = true
-      while (j < lists.length && ok) {
-        val target = p + j
         val arr = lists(j)
         var c = cursors(j)
         while (c < arr.length && arr(c) < target) c += 1

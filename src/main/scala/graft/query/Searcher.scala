@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.{Bm25, LenByte}
+import graft.core.Bm25
 import graft.index.PostingCodec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,24 +10,25 @@ import org.apache.spark.sql.functions._
   * (`vacuum_engine.h:201-258` → `query_processing.h:956-979` dispatch →
   * k-way leapfrog → lossy BM25 → bounded heap).
   *
-  * Plan shape (all Catalyst-planned):
+  * Plan shape (all Catalyst-planned, one pipeline per query kind —
+  * [[searchAll]] and [[searchAllPhrase]] serve a batch, [[search]] is a
+  * one-query call of them):
   *   1. term lookup (P1): `postings.filter(term IN queryTerms)` — pushed to
   *     the parquet scan; blocks are written term-sorted so row-group min/max
   *     prune everything else. Query terms are broadcast, never shuffled.
-  *   2. skip pruning (J3 analog): block rows are pruned by
-  *     [firstDocId,lastDocId] overlap with the rarest term's block ranges
-  *     before any payload decode.
-  *   3. decode (P3): only (docIds, tfs) columns decoded for scoring;
-  *     `positions` is touched only by the phrase path — parquet column
-  *     pruning keeps it unread ("read as needed").
-  *   4. conjunctive intersection (J2): groupBy(docId) with count(distinct
-  *     term) == nTerms — an equi-join on docId realized as one hash
+  *   2. skip pruning (J3 analog) and block-max WAND: block rows are pruned
+  *     driver-side by [firstDocId,lastDocId] overlap with the query's
+  *     coverage intersection, then by score ceilings, before any decode.
+  *   3. decode (P3): only (docIds, tfs, lenBytes) columns decoded for
+  *     scoring; `positions` is touched only by the phrase path — parquet
+  *     column pruning keeps it unread ("read as needed").
+  *   4. conjunctive intersection (J2): groupBy(queryId, docId) with a count
+  *     of matched terms — an equi-join on docId realized as one hash
   *     aggregation, partial/final, no join ordering issue at any arity.
-  *   5. lossy BM25 (F5-F7): join with the (docId, lenByte) table, sum of
-  *     idf·tfNormLossy per doc.
-  *   6. exact global top-k (A5/O2/O3): orderBy(score desc, docId asc)
-  *     limit k — Spark plans TakeOrderedAndProject: per-partition bounded
-  *     heaps merged on the driver, the same partial/final shape as the
+  *   5. lossy BM25 (F5-F7): idf·tfNormLossy per slot over the inline norm
+  *     byte, summed in slot order.
+  *   6. exact per-query top-k (A5/O2/O3): [[TopKAggregator]] — per-partition
+  *     bounded heaps merged pairwise, the same partial/final shape as the
   *     reference's per-query heap (tie rule per SURVEY.md §8.4).
   */
 object Searcher {
@@ -118,13 +119,6 @@ object Searcher {
       else df.filter(col("seg").isin(liveSegments: _*))
     }
     def postings: DataFrame = segRead("postings")
-    /** Whether the postings carry the inline per-posting norm stream
-      * (`lenBytes`, [[graft.index.PostingCodec]]). When true, scoring is
-      * join-free; a legacy index without the column falls back to the
-      * (docId, lenByte) docstore-projection join. Resolved once per loaded
-      * index from the parquet schema — no data read. */
-    lazy val hasInlineLen: Boolean =
-      try postings.columns.contains("lenBytes") catch { case _: Throwable => false }
     /** For an incrementally-built index (streaming segments) stats rows are
       * per (term, segment) and need summing; a batch index skips the extra
       * aggregation. */
@@ -134,18 +128,9 @@ object Searcher {
       else raw
     }
     /** Doc lengths: a columnar projection of the docstore (len/lenByte are
-      * stored inline — parquet reads exactly these 3 columns); falls back
-      * to a legacy standalone doclen/ stage when present. */
-    def doclen: DataFrame =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(indexDir, "doclen")))
-        segRead("doclen")
-      else segRead("docstore").select("docId", "len", "lenByte")
+      * stored inline — parquet reads exactly these 3 columns). */
+    def doclen: DataFrame = segRead("docstore").select("docId", "len", "lenByte")
     def docstore: DataFrame = segRead("docstore")
-    /** Two-way phrase-pruning bloom store, if present AND covering every
-      * live segment. The J5 semi-join is an inner join on docId, so a
-      * bloom store missing some segment's docs would silently drop phrase
-      * candidates from those docs — partial coverage therefore disables
-      * pruning entirely (lossy-safe: the positional check stays exact). */
     /** Committed delete tombstones (union of generations), if any — the
       * Lucene live-docs analog ([[graft.index.Tombstones]]). None on the
       * common no-deletes index: the query path pays one directory listing,
@@ -170,6 +155,11 @@ object Searcher {
         .sortWithinPartitions("rev")
         .cache()
     }
+    /** Two-way phrase-pruning bloom store, if present AND covering every
+      * live segment. The J5 semi-join keeps only docs with bloom rows, so a
+      * store missing some segment's docs would silently drop phrase
+      * candidates from those docs — partial coverage therefore disables
+      * pruning entirely (lossy-safe: the positional check stays exact). */
     def bloom: Option[DataFrame] = {
       val p = java.nio.file.Paths.get(indexDir, "bloom")
       if (!java.nio.file.Files.exists(p)) None
@@ -259,6 +249,14 @@ object Searcher {
     import spark.implicits._
     // nDocs and exact avg: integer sum / count — deterministic at any
     // parallelism (no FP accumulation-order dependence).
+    // every scoring path reads the per-posting norm from the blocks' inline
+    // `lenBytes` stream ([[decodedScoreRows]])
+    val segs = graft.index.Manifest.committedSegments(indexDir)
+      .filter(s => asOfSeg.forall(s <= _))
+    require(graft.index.Manifest.stageColumns(indexDir, "postings", segs)
+        .forall(_.contains("lenBytes")),
+      s"index $indexDir: postings lack the inline lenBytes norm stream " +
+        "(written by an older build) — rebuild the index")
     val probe = LoadedIndex(spark, indexDir, 0L, 0.0, Array.empty, asOfSeg)
     val (n, sumLen) = probe.doclen
       .agg(count(lit(1)), coalesce(sum($"len"), lit(0L)).cast("long"))
@@ -272,52 +270,30 @@ object Searcher {
   val BloomNeverUse = 0
 
   /** Decode posting blocks into scoring rows (term, docId, tf, lenByte).
-    *
-    * An inline-norm index ([[LoadedIndex.hasInlineLen]]) reads the lenByte
-    * from the block's own `lenBytes` stream — the whole scoring pipeline
-    * then runs with ZERO joins against per-doc state. A legacy index joins
-    * the (docId, lenByte) docstore projection instead; that join is the
-    * scale hazard this codec stream exists to remove (at 10^10 docs the
-    * projection is neither broadcastable nor cheap to shuffle decoded
-    * postings against).
-    *
-    * `acc` (optional) accumulates decoded-posting counts for diagnostics. */
-  def decodedScoreRows(ix: LoadedIndex, blocks: DataFrame,
-                       acc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+    * The lenByte comes from the block's own `lenBytes` stream, so every
+    * scoring pipeline runs with ZERO joins against per-doc state (at 10^10
+    * docs a (docId, lenByte) projection is neither broadcastable nor cheap
+    * to shuffle decoded postings against). */
+  def decodedScoreRows(ix: LoadedIndex, blocks: DataFrame): DataFrame = {
     val spark = ix.spark
     import spark.implicits._
-    if (ix.hasInlineLen) {
-      blocks.select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes")
-        .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (t, prev, n, ids, tfs, lbs) =>
-          acc.foreach(_.add(n))
-          val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-          val lb = PostingCodec.decodeLenBytes(n, lbs)
-          dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, lb(i)) }
-        }
-        .toDF("term", "docId", "tf", "lenByte")
-    } else {
-      blocks.select("term", "prevDocId", "n", "docIds", "tfs")
-        .as[(String, Int, Int, Array[Byte], Array[Byte])]
-        .flatMap { case (t, prev, n, ids, tfs) =>
-          acc.foreach(_.add(n))
-          PostingCodec.decodeDocIdTf(prev, n, ids, tfs).iterator.map(p => (t, p._1, p._2))
-        }
-        .toDF("term", "docId", "tf")
-        .join(ix.doclen.select(col("docId"), col("lenByte")), "docId")
-    }
+    blocks.select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes")
+      .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
+      .flatMap { case (t, prev, n, ids, tfs, lbs) =>
+        val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
+        val lb = PostingCodec.decodeLenBytes(n, lbs)
+        dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, lb(i)) }
+      }
+      .toDF("term", "docId", "tf", "lenByte")
   }
 
-  /** Conjunctive (optionally phrase) BM25 top-k for one query.
-    * Returns (docId, score, rank), rank 1-based.
-    *
-    * `bloomFactor` is the reference's `bloom_enable_factor`
-    * (`query_processing.h:795-807`, default 1): for a 2-term phrase the
-    * bloom probe direction is cost-ruled by posting-list sizes —
-    * `factor*df1 <= df2` probes term1's END filter for term2,
-    * `factor*df2 < df1` probes term2's BEGIN filter for term1, and
-    * comparable sizes skip the bloom entirely; k>2 falls back to the
-    * end-filter chain over adjacent pairs (`CheckBloomFallBack`). */
+  /** BM25 top-k for ONE query: a one-query call of the batched pipeline —
+    * [[searchAllPhrase]] for phrase and proximity queries, [[searchAll]]
+    * for everything else (conjunctive or `conjunctive = false` OR terms,
+    * NOT terms, boosts, block-max WAND). Every option keeps its batched
+    * meaning: `after` is the search_after cursor, `bloomFactor` the
+    * reference's `bloom_enable_factor` (see [[searchAllPhrase]]).
+    * Returns (docId, score, rank), rank 1-based. */
   def search(ix: LoadedIndex, queryTerms: Seq[String], k: Int,
              phrase: Boolean = false, bloomFactor: Int = 1,
              wandMinPostings: Long = 50000L,
@@ -328,343 +304,24 @@ object Searcher {
              boosts: Map[String, Double] = Map.empty,
              phraseShifts: Option[Seq[Int]] = None): Dataset[Hit] = {
     require(conjunctive || !phrase, "phrase queries are conjunctive by definition")
-    require(slop >= 0, "slop must be non-negative")
-    // explicit per-slot shifts (analyzed-query position gaps, Lucene
-    // match_phrase semantics): exact-phrase only, one shift per slot
-    require(phraseShifts.forall(sh => phrase && slop == 0 &&
-        sh.size == queryTerms.size && sh.sliding(2).forall {
-          case Seq(a, b) => a < b; case _ => true }),
-      "phraseShifts require an exact phrase and strictly increasing shifts")
-    // boosts scale each slot's idf weight; non-positive boosts would break
-    // the BMW ceiling rule (ub would no longer upper-bound the slot score)
-    require(boosts.valuesIterator.forall(_ > 0.0), "boosts must be positive")
-    val spark = ix.spark
-    import spark.implicits._
-    val terms0 = queryTerms.distinct
-    if (terms0.isEmpty || k <= 0) return spark.emptyDataset[Hit]
-    // NOT (set difference — Lucene MUST_NOT; completes the Boolean family
-    // alongside the OR completion above): a required term that is also
-    // excluded is unsatisfiable by construction.
-    val exTerms = excludeTerms.distinct
-    if (conjunctive && exTerms.exists(terms0.contains))
-      return spark.emptyDataset[Hit]
+    val q = Seq(0 -> queryTerms)
+    def one[V](v: Option[V]): Map[Int, V] = v.map(0 -> _).toMap
+    val ex = one(Some(excludeTerms).filter(_.nonEmpty))
+    val bs = one(Some(boosts).filter(_.nonEmpty))
+    hitsOf(
+      if (phrase)
+        searchAllPhrase(ix, q, k, one(Some(slop).filter(_ != 0)), ex, bs,
+          one(phraseShifts), Map(0 -> bloomFactor), one(after))
+      else
+        searchAll(ix, q, k, if (conjunctive) Set.empty else Set(0), ex,
+          wandMinPostings, bs, one(after)))
+  }
 
-    // (P1/P2) df per query term from the broadcast-sized termstats.
-    // Conjunctive: empty result if any term is absent
-    // (`qq_mem_engine.h:345-347`). Disjunctive (SearchOperator::OR,
-    // declared `types.h:70` but never implemented by the reference —
-    // completed here): absent terms contribute nothing.
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin((terms0 ++ exTerms).distinct: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
-    if (conjunctive && terms0.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[Hit]
-    val terms = if (conjunctive) terms0 else terms0.filter(dfs.contains)
-    if (terms.isEmpty) return spark.emptyDataset[Hit]
-    val idfs: Map[String, Double] = dfs.map { case (t, df) => t -> Bm25.idf(ix.nDocs, df) }
-    // a repeated query term scores once PER SLOT (`scoring.h:133-142`) —
-    // fold the multiplicity AND the query-time boost into the idf weight,
-    // for scoring bounds (every slot of term t contributes
-    // ≤ idf·boost·maxTfNorm, so the summed ceiling stays an upper bound)
-    val idfW: Map[String, Double] =
-      idfs.map { case (t, v) =>
-        t -> v * queryTerms.count(_ == t) * boosts.getOrElse(t, 1.0) }
-    val cache = ix.lossyCache
-    val nTerms = terms.size
-
-    // ---- block-max planning (J3 skip + BMW, driver-side on df/128 meta) ----
-    // 1. candidate docId space = intersection of every term's block coverage
-    //   (generalizes the rarest-term range prune: rare∧hot decodes only the
-    //   hot blocks overlapping the rare term's ranges, any-arity).
-    // 2. optional WAND θ-prune for large decodes: a pilot job over the
-    //   highest-ceiling candidate intervals computes an exact kth-score
-    //   lower bound θ; a block then survives only if its own ceiling plus
-    //   the other terms' max ceilings over its range can still reach θ.
-    //   Every posting of a doc with true score >= θ sits in a surviving
-    //   block (its co-terms' blocks overlap its own), so the final
-    //   aggregation stays exact.
-    val blocks = ix.postings.filter($"term".isin(terms: _*))
-    // meta rows fetched through [[MetaStore]]: per-term LRU cache on the
-    // warm path, two-level coarse→fine fetch past the direct cap — the
-    // driver never holds O(Σ df/128) rows for a hot∧rare conjunction
-    val metaShape = if (conjunctive) terms.map(Seq(_)) else Seq(terms.toSeq)
-    val metaRaw = MetaStore.fineMeta(ix, blocks, terms, dfs, Seq(metaShape))
-    val meta: Map[String, Array[BlockMax.BlockMeta]] = metaRaw.groupBy(_._1)
-      .map { case (t, rs) =>
-        val w = idfW(t)
-        t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, r._4,
-          w * Bm25.tfNormLossy(r._5.toLong, r._6, cache)))
-      }
-    val perTerm = terms.map(t => meta.getOrElse(t, Array.empty[BlockMax.BlockMeta]))
-    // conjunctive: a matching doc lies in EVERY term's coverage → intersect.
-    // disjunctive: any term's coverage can contribute → union. The WAND
-    // θ-prune below is sound in both modes: a block b of term t is dropped
-    // only when ub(b) + Σ_{t'≠t} maxUb(t', b.range) < θ, which upper-bounds
-    // ANY doc in b's total score, so every block of a doc with true score
-    // ≥ θ survives and its score is computed in full.
-    val candidates =
-      if (conjunctive) BlockMax.intersectCoverage(perTerm)
-      else BlockMax.unionCoverage(perTerm)
-    if (candidates.isEmpty) return spark.emptyDataset[Hit]
-    val rangeSurvivors: Map[String, Array[Int]] =
-      terms.map(t => t -> BlockMax.overlapping(meta(t), candidates)).toMap
-    val afterRangeBlocks = rangeSurvivors.valuesIterator.map(_.length.toLong).sum
-    val estPostings = terms.iterator
-      .map(t => rangeSurvivors(t).iterator.map(i => meta(t)(i).n.toLong).sum).sum
-
-    // Excluded-doc set, skip-pruned: only exclusion blocks whose docId range
-    // overlaps the POSITIVE terms' candidate coverage are decoded — a hot
-    // excluded term (`-return` over source code) costs only the slice of its
-    // postings that can intersect the required terms, never a full decode.
-    // Applied inside scoreOf so the WAND pilot's θ is computed over
-    // post-exclusion docs (otherwise θ could exceed the true kth final
-    // score and over-prune).
-    val exDocs: Option[DataFrame] =
-      if (exTerms.isEmpty) None
-      else {
-        val exBlocks = ix.postings.filter($"term".isin(exTerms: _*))
-        // meta bounded by the POSITIVE candidates' coverage
-        val exMetaRaw = MetaStore.boundedRangeMeta(ix, exTerms, candidates, dfs)
-        val exKeys = exMetaRaw.groupBy(_._1).iterator.flatMap { case (t, rs) =>
-          val m = rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, 0, 0.0))
-          BlockMax.overlapping(m, candidates).iterator.map(i => (t, m(i).first))
-        }.toSeq
-        if (exKeys.isEmpty) None
-        else {
-          val keysDf = broadcast(exKeys.toDF("term", "firstDocId"))
-          Some(exBlocks.join(keysDf, Seq("term", "firstDocId"), "left_semi")
-            .select("prevDocId", "n", "docIds", "tfs")
-            .as[(Int, Int, Array[Byte], Array[Byte])]
-            .flatMap { case (prev, n, ids, tfs) =>
-              PostingCodec.decodeDocIdTf(prev, n, ids, tfs).iterator.map(_._1)
-            }
-            .toDF("docId").distinct())
-        }
-      }
-    // Delete tombstones compose with NOT-term exclusion: both are doc-level
-    // anti-joins applied INSIDE scoreOf, so the WAND pilot's θ is computed
-    // over post-delete docs (a deleted doc inflating θ could over-prune).
-    // Stats (N, avgdl, df, idf) above were computed WITHOUT the tombstones
-    // — Lucene delete semantics: surviving docs score identically until a
-    // merge re-baselines the stats.
-    val delDocs: Option[DataFrame] = ix.tombstones
-    // `after` cursor (deep paging): scores are bitwise-deterministic
-    // (slot-ordered FP sum), so the strict-total-order predicate on
-    // (score desc, docId asc) is exact across recomputation. Applied HERE —
-    // inside scoreOf — so the WAND pilot's θ is the kth score AFTER the
-    // cursor and block pruning stays sound for any page.
-    def minusExcluded(df: DataFrame): DataFrame = {
-      val afterEx = exDocs.map(e => df.join(e, Seq("docId"), "left_anti")).getOrElse(df)
-      val afterDel = delDocs.map(d => afterEx.join(d, Seq("docId"), "left_anti")).getOrElse(afterEx)
-      after match {
-        case Some((s0, d0)) =>
-          afterDel.filter($"score" < s0 || ($"score" === s0 && $"docId" > d0))
-        case None => afterDel
-      }
-    }
-
-    val decodedAcc = spark.sparkContext.longAccumulator("graft.decodedPostings")
-    def blocksFor(sel: Map[String, Array[Int]]): DataFrame = {
-      val keys: Set[(String, Int)] = sel.iterator.flatMap { case (t, idxs) =>
-        idxs.iterator.map(i => (t, meta(t)(i).first))
-      }.toSet
-      // broadcast semi-join (not a scalar UDF): stays in whole-stage
-      // codegen, and the key set is bounded by the query terms' block counts
-      val keysDf = broadcast(keys.toSeq.toDF("term", "firstDocId"))
-      blocks.join(keysDf, Seq("term", "firstDocId"), "left_semi")
-    }
-
-    val lenByteOf = ix.doclen.select($"docId", $"lenByte")
-    // per-SLOT scoring: the reference (and the oracle) sums a doc's score
-    // slot by slot in query order (`scoring.h:133-142`), while a hash-agg
-    // sum(partScore) accumulates in partition-dependent order — equal up to
-    // ulps, which is enough to flip a rank TIE between two template docs
-    // with equal true scores at corpus scale (and makes scores vary run to
-    // run). One broadcast row per (slot, term) — a repeated term is a
-    // separate slot, an absent (disjunctive) slot contributes no rows —
-    // then the aggregation collects the (slot, partScore) pairs (each slot
-    // has <=1 contribution per doc, so no accumulation happens inside a
-    // slot) and the codegen'd [[graft.functions.SlotOrderedSum]] re-adds
-    // them in slot order: bitwise-deterministic and bitwise-identical to
-    // the oracle's loop. `firstSlot` marks the first slot of each distinct
-    // term so nMatched is a plain conditional count (no countDistinct
-    // Expand rewrite doubling the aggregation input).
-    val slotDf = broadcast(queryTerms.zipWithIndex.map { case (t, i) =>
-      (i, t, idfs.getOrElse(t, 0.0) * boosts.getOrElse(t, 1.0),
-        queryTerms.indexOf(t) == i)
-    }.toDF("slot", "term", "idf", "firstSlot"))
-    val cacheLit = array(cache.map(lit).toSeq: _*)
-    val partScoreExpr = $"idf" *
-      ($"tf" * lit(Bm25.K1 + 1.0) / ($"tf" + element_at(cacheLit, $"lenByte" + 1)))
-    // conjunctive AND + per-slot score pivot in one hash aggregation over
-    // decoded (term, docId, tf) triples — (P3) only scoring columns are read
-    def scoreOf(sel: DataFrame): DataFrame = {
-      val agg = decodedScoreRows(ix, sel, Some(decodedAcc))
-        .join(slotDf, "term")
-        .withColumn("partScore", partScoreExpr)
-        .groupBy($"docId")
-        .agg(sum(when($"firstSlot", 1).otherwise(0)).as("nMatched"),
-          collect_list(struct($"slot", $"partScore")).as("sps"))
-        .withColumn("score", graft.functions.functions.slot_sum($"sps"))
-      minusExcluded(if (conjunctive) agg.filter($"nMatched" === nTerms) else agg)
-    }
-
-    val usedWand = !phrase && estPostings > wandMinPostings
-    val (finalSel, theta) =
-      if (!usedWand) (rangeSurvivors, Double.NegativeInfinity)
-      else {
-        val pilotIv = BlockMax.pilotIntervals(perTerm,
-          BlockMax.refineByBlocks(perTerm, candidates),
-          targetDocs = math.max(64L * k, 1024L), disjunctive = !conjunctive)
-        val pilotSel = terms.map(t => t -> BlockMax.overlapping(meta(t), pilotIv)).toMap
-        val pilotTop = scoreOf(blocksFor(pilotSel))
-          .orderBy(desc("score"), asc("docId")).limit(k)
-          .select($"score").as[Double].collect()
-        if (pilotTop.length < k) (rangeSurvivors, Double.NegativeInfinity)
-        else {
-          val th = pilotTop.last
-          val sel = terms.map { t =>
-            t -> rangeSurvivors(t).filter { i =>
-              val b = meta(t)(i)
-              val others = terms.iterator.filter(_ != t)
-                .map(t2 => BlockMax.maxUbIn(meta(t2), b.first, b.last)).sum
-              b.ub + others >= th - 1e-9
-            }
-          }.toMap
-          (sel, th)
-        }
-      }
-    val pruned = blocksFor(finalSel)
-    def publishDiag(): Unit = lastDiag.set(BlockMax.Diag(
-      nTerms, metaRaw.length.toLong,
-      meta.valuesIterator.flatten.map(_.n.toLong).sum,
-      afterRangeBlocks, finalSel.valuesIterator.map(_.length.toLong).sum,
-      decodedAcc.value, theta, usedWand))
-
-    val matched =
-      if (!phrase) null // scored directly via scoreOf(pruned) below
-      else {
-        // (J4) phrase path: decode positions for candidate docs and keep
-        // only docs where adjusted positions intersect. The per-posting
-        // norm rides the decode on an inline-norm index (lenByte = -1
-        // marks a legacy index; scoring joins the docstore projection).
-        val inlineLen = ix.hasInlineLen
-        val withPos0 =
-          if (inlineLen)
-            pruned.select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes", "positions")
-              .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-              .flatMap { case (t, prev, n, ids, tfs, lbs, pos) =>
-                val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-                val lb = PostingCodec.decodeLenBytes(n, lbs)
-                val ps = PostingCodec.decodePositions(n, pos)
-                dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, ps(i), lb(i)) }
-              }
-          else
-            pruned.select("term", "prevDocId", "n", "docIds", "tfs", "positions")
-              .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-              .flatMap { case (t, prev, n, ids, tfs, pos) =>
-                val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-                val ps = PostingCodec.decodePositions(n, pos)
-                dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, ps(i), -1) }
-              }
-        // (J5) bloom semi-join: two-way cost-ruled probes against the bloom
-        // store — lossy-positive, so the positional check below stays exact.
-        // Each check is (rowTerm, probe, useEnd): read rowTerm's filter for
-        // this doc and test `probe` against its end (successor) or begin
-        // (predecessor) side, direction picked by the posting-size rule.
-        // Bloom filters encode ADJACENCY (the successor/predecessor pair
-        // sets), so they only apply at slop 0 — a proximity match need not
-        // contain any adjacent pair — and only when explicit shifts (if
-        // any) are consecutive: a stopword gap breaks pair adjacency.
-        val gappedShifts = phraseShifts.exists(sh =>
-          !sh.indices.forall(i => sh(i) == sh.head + i))
-        val checks: Seq[(String, String, Boolean)] =
-          if (bloomFactor == BloomNeverUse || queryTerms.size < 2 ||
-              slop > 0 || gappedShifts) Seq.empty
-          else if (queryTerms.size == 2) {
-            val (a, b) = (queryTerms.head, queryTerms(1))
-            val (da, db) = (dfs(a), dfs(b))
-            if (bloomFactor.toLong * da <= db) Seq((a, b, true))        // end-probe a→b
-            else if (bloomFactor.toLong * db < da) Seq((b, a, false))   // begin-probe b←a
-            else Seq.empty                                              // comparable: skip bloom
-          } else queryTerms.sliding(2).map(p => (p.head, p(1), true)).toSeq
-        val bloomDf = if (checks.isEmpty) None else ix.bloom
-        val withPos = bloomDf match {
-          case Some(bdf) =>
-            val bcChecks = spark.sparkContext.broadcast(checks)
-            val passing = bdf
-              .filter($"term".isin(checks.map(_._1).distinct: _*))
-              .select("term", "docId", "beginBits", "endBits", "k")
-              .as[(String, Int, Array[Byte], Array[Byte], Int)]
-              .groupByKey(_._2)
-              .flatMapGroups { (docId, rows) =>
-                val m = rows.map(r => r._1 -> ((r._3, r._4, r._5))).toMap
-                val ok = bcChecks.value.forall { case (rowTerm, probe, useEnd) =>
-                  m.get(rowTerm).exists { case (begin, end, kk) =>
-                    new graft.index.Bloom.Filter(if (useEnd) end else begin, kk)
-                      .mightContain(probe)
-                  }
-                }
-                if (ok) Iterator.single(docId) else Iterator.empty
-              }.toDF("docId")
-            withPos0.toDF("term", "docId", "tf", "pos", "lenByte")
-              .join(passing, "docId")
-              .select($"term", $"docId", $"tf", $"pos", $"lenByte")
-              .as[(String, Int, Int, Array[Int], Int)]
-          case None => withPos0
-        }
-        val bcQTerms = spark.sparkContext.broadcast(queryTerms)
-        val bcShifts = spark.sparkContext.broadcast(phraseShifts)
-        withPos.groupByKey(_._2)
-          .flatMapGroups { (docId, rows) =>
-            val byTerm = rows.toArray.groupBy(_._1)
-            val qts = bcQTerms.value
-            if (qts.distinct.forall(byTerm.contains)) {
-              // one position list per query SLOT (repeated terms reuse the
-              // same list at different adjusted shifts — `query_processing.h`
-              // leapfrogs per-slot, not per-unique-term)
-              val posLists = qts.map(t => byTerm(t).head._4)
-              val posOk = bcShifts.value match {
-                case Some(sh) => graft.core.Oracle.phraseMatchAt(posLists, sh)
-                case None if slop == 0 => graft.core.Oracle.phraseMatch(posLists)
-                case None => graft.core.Oracle.proximityMatch(posLists, slop)
-              }
-              if (posOk)
-                byTerm.valuesIterator.map(_.head).map(r => (r._1, r._2, r._3, r._5))
-              else Iterator.empty
-            } else Iterator.empty
-          }
-      }
-
-    // Scoring is pure built-in Column arithmetic (no UDF in the arithmetic →
-    // whole-stage codegen): idf via a broadcast (term, idf) join, the
-    // 256-entry lossy denominator cache as an array literal indexed by the
-    // length byte. One hash aggregation does both the conjunctive AND and
-    // the score sum; then TakeOrderedAndProject = partial heaps + driver
-    // merge.
-    val scored =
-      if (!phrase) scoreOf(pruned)
-      else minusExcluded({
-          val m = matched.toDF("term", "docId", "tf", "lenByte")
-          if (ix.hasInlineLen) m else m.drop("lenByte").join(lenByteOf, "docId")
-        }
-        .join(slotDf, "term")
-        .withColumn("partScore", partScoreExpr)
-        .groupBy($"docId")
-        .agg(sum(when($"firstSlot", 1).otherwise(0)).as("nMatched"),
-          collect_list(struct($"slot", $"partScore")).as("sps"))
-        .withColumn("score", graft.functions.functions.slot_sum($"sps"))
-        .filter($"nMatched" === nTerms))
-    val hits = scored
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
-      .select($"docId".cast("int"), $"score")
-      .as[(Int, Double)]
-      .collect()
-      .zipWithIndex
-      .map { case ((d, s), i) => Hit(d, s, i + 1) }
-    publishDiag()
-    hits.toSeq.toDS()
+  /** The hits of a one-query (queryId, rank, docId, score) frame, ranked. */
+  private[query] def hitsOf(rows: DataFrame): Dataset[Hit] = {
+    import rows.sparkSession.implicits._
+    rows.select($"docId", $"score", $"rank").as[(Int, Double, Int)].collect()
+      .sortBy(_._3).map { case (d, s, r) => Hit(d, s, r) }.toSeq.toDS()
   }
 
   /** Dictionary prefix probe — the trie-range analog (P4).
@@ -864,11 +521,8 @@ object Searcher {
     if (liveGroups.exists(_.isEmpty)) return spark.emptyDataset[Hit] // P2 analog
     val liveTerms = liveGroups.flatten
     val blocks = ix.postings.filter($"term".isin(liveTerms: _*))
-    val metaRaw = MetaStore.fineMeta(ix, blocks, liveTerms, dfs, Seq(liveGroups))
-    val meta: Map[String, Array[BlockMax.BlockMeta]] = metaRaw.groupBy(_._1)
-      .map { case (t, rs) =>
-        t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, 0, 0.0))
-      }
+    val meta = rangesByTerm(MetaStore.fineMeta(ix, blocks, liveTerms, dfs, Seq(liveGroups))
+      .map(r => (r._1, r._2, r._3)))
     // conjunctive-over-groups coverage: ∩_g (∪_{m∈g} ranges(m))
     val perGroupCov = liveGroups.map(g =>
       BlockMax.unionCoverage(g.map(t => meta.getOrElse(t, Array.empty[BlockMax.BlockMeta]))))
@@ -1096,21 +750,15 @@ object Searcher {
     if (terms.exists(t => !dfsAll.contains(t))) return empty
     val blocks = ix.postings.filter($"term".isin(terms ++ ex: _*))
     val posBlocks = ix.postings.filter($"term".isin(terms: _*))
-    val posMetaRaw = MetaStore.fineMeta(ix, posBlocks, terms, dfsAll,
-      Seq(terms.map(Seq(_))))
-    val posMeta = posMetaRaw.groupBy(_._1).map { case (t, rs) =>
-      t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, 0, 0.0))
-    }
+    val posMeta = rangesByTerm(MetaStore.fineMeta(ix, posBlocks, terms, dfsAll,
+      Seq(terms.map(Seq(_)))).map(r => (r._1, r._2, r._3)))
     val candidates = BlockMax.intersectCoverage(
       terms.map(t => posMeta.getOrElse(t, Array.empty[BlockMax.BlockMeta])))
     if (candidates.isEmpty) return empty
     // exclusion meta bounded by the positive candidates' coverage
     val exMeta =
       if (ex.isEmpty) Map.empty[String, Array[BlockMax.BlockMeta]]
-      else MetaStore.boundedRangeMeta(ix, ex, candidates, dfsAll)
-        .groupBy(_._1).map { case (t, rs) =>
-          t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, 0, 0.0))
-        }
+      else rangesByTerm(MetaStore.boundedRangeMeta(ix, ex, candidates, dfsAll))
     val meta = posMeta ++ exMeta
     def decodeIds(sel: Seq[String]): DataFrame = {
       val keys = sel.flatMap { t =>
@@ -1164,80 +812,176 @@ object Searcher {
       .agg(count(lit(1)).as("n_docs"))
   }
 
-  /** Pruning diagnostics of the most recent [[search]] call on this JVM
-    * (driver-side; for tests/benchmarks, not part of the query result). */
+  /** Pruning diagnostics of the most recent [[searchAll]] or
+    * [[searchAllPhrase]] call on this JVM, batch totals (driver-side; for
+    * tests and benchmarks, not part of the query result). */
   val lastDiag = new java.util.concurrent.atomic.AtomicReference[BlockMax.Diag]()
 
-  /** Pruning diagnostics of the most recent [[searchAll]] call on this JVM:
-    * (total postings of the batch's terms, postings in decoded blocks). */
-  val lastBatchDiag = new java.util.concurrent.atomic.AtomicReference[(Long, Long)]()
+  private def emptyRows(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Int, Int, Int, Double)].toDF("queryId", "rank", "docId", "score")
+  }
+
+  private def termDfs(ix: LoadedIndex, terms: Seq[String]): Map[String, Long] = {
+    val spark = ix.spark
+    import spark.implicits._
+    ix.termstats.filter($"term".isin(terms: _*))
+      .select("term", "df").as[(String, Long)].collect().toMap
+  }
+
+  private def requirePositive(boosts: Map[Int, Map[String, Double]]): Unit =
+    // boosts scale each slot's idf weight; non-positive boosts would break
+    // the BMW ceiling rule (ub would no longer upper-bound the slot score)
+    require(boosts.valuesIterator.flatMap(_.valuesIterator).forall(_ > 0.0),
+      "boosts must be positive")
+
+  /** Per-term block docId ranges, ascending (no score ceilings). */
+  private def rangesByTerm(rows: Iterable[(String, Int, Int)]): Map[String, Array[BlockMax.BlockMeta]] =
+    rows.groupBy(_._1).map { case (t, rs) =>
+      t -> rs.toArray.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, 0, 0.0))
+    }
+
+  /** Skip-pruned NOT-term exclusion shared by both batched pipelines: the
+    * (queryId, docId) pairs of each query's excluded terms. Exclusion meta
+    * is fetched only inside the union of the batch's candidate coverage,
+    * and only the exclusion blocks overlapping THAT query's coverage decode
+    * — a hot excluded term (`-return` over source code) costs only the
+    * slice of its postings that can intersect the required terms. */
+  private def exclusionPairs(ix: LoadedIndex, cands: Seq[(Int, Array[(Int, Int)])],
+                             excludes: Map[Int, Seq[String]],
+                             dfs: Map[String, Long]): Option[DataFrame] = {
+    val spark = ix.spark
+    import spark.implicits._
+    val perQ = cands.flatMap { case (qid, cand) =>
+      excludes.get(qid).map(ex => (qid, ex.distinct, cand))
+    }
+    val allEx = perQ.flatMap(_._2).distinct
+    if (allEx.isEmpty) return None
+    val exMeta = rangesByTerm(
+      MetaStore.boundedRangeMeta(ix, allEx, MetaStore.unionIv(cands.map(_._2)), dfs))
+    val exKeys: Set[(String, Int)] = perQ.iterator.flatMap { case (_, ex, cand) =>
+      ex.iterator.flatMap { t =>
+        exMeta.get(t).iterator.flatMap { m =>
+          BlockMax.overlapping(m, cand).iterator.map(i => (t, m(i).first))
+        }
+      }
+    }.toSet
+    if (exKeys.isEmpty) return None
+    val qExDf = broadcast(perQ.flatMap { case (qid, ex, _) => ex.map((qid, _)) }
+      .toDF("queryId", "term"))
+    Some(ix.postings.filter($"term".isin(allEx: _*))
+      .join(broadcast(exKeys.toSeq.toDF("term", "firstDocId")),
+        Seq("term", "firstDocId"), "left_semi")
+      .select("term", "prevDocId", "n", "docIds", "tfs")
+      .as[(String, Int, Int, Array[Byte], Array[Byte])]
+      .flatMap { case (t, prev, n, ids, tfs) =>
+        PostingCodec.decodeDocIdTf(prev, n, ids, tfs).iterator.map(p => (t, p._1))
+      }
+      .toDF("term", "docId")
+      .join(qExDf, "term")
+      .select("queryId", "docId").distinct())
+  }
+
+  /** Doc-level filters every scored (queryId, docId, score) frame passes
+    * before its top-k heap: NOT-term exclusion pairs, delete tombstones,
+    * then the per-query `after` cursor. The WAND pilot passes them too, so
+    * θ is the kth score over exactly the docs the main job may return and
+    * block pruning stays sound for any page. Stats (N, avgdl, df, idf) stay
+    * pre-delete — Lucene semantics: surviving docs score identically until
+    * a merge re-baselines them. The cursor predicate on (score desc, docId
+    * asc) is exact because scores are bitwise-deterministic. */
+  private def admitted(ix: LoadedIndex, scored: DataFrame, exPairs: Option[DataFrame],
+                       after: Map[Int, (Double, Int)]): DataFrame = {
+    import ix.spark.implicits._
+    val afterEx = exPairs.map(e => scored.join(e, Seq("queryId", "docId"), "left_anti"))
+      .getOrElse(scored)
+    val live = ix.tombstones.map(d => afterEx.join(d, Seq("docId"), "left_anti"))
+      .getOrElse(afterEx)
+    if (after.isEmpty) live
+    else live
+      .join(broadcast(after.toSeq.map { case (q, (s, d)) => (q, s, d) }
+        .toDF("queryId", "afterScore", "afterDocId")), Seq("queryId"), "left_outer")
+      .filter($"afterScore".isNull || $"score" < $"afterScore" ||
+        ($"score" === $"afterScore" && $"docId" > $"afterDocId"))
+      .drop("afterScore", "afterDocId")
+  }
+
+  /** Per-query exact top-k via the bounded-heap Aggregator (A5): partial
+    * per-partition heaps + pairwise merge — no per-query full sort (a
+    * window row_number would sort every matched doc). Input columns
+    * (queryId, docId, score); returns (queryId, rank, docId, score). */
+  private[query] def topKRows(df: DataFrame, k: Int): DataFrame = {
+    import df.sparkSession.implicits._
+    df.select($"queryId", $"docId", $"score")
+      .as[(Int, Int, Double)]
+      .groupByKey(_._1)
+      .mapValues(r => (r._2, r._3))
+      .agg(new TopKAggregator(k).toColumn)
+      .flatMap { case (qid, top) =>
+        top.iterator.zipWithIndex.map { case ((d, s), i) => (qid, i + 1, d, s) }
+      }
+      .toDF("queryId", "rank", "docId", "score")
+  }
 
   /** Batch search: many queries at once — a bounded number of Spark jobs
-    * for the whole query set (queryId, terms). Used by the bench.
+    * for the whole query set (queryId, terms), and the only non-phrase BM25
+    * pipeline ([[search]] is a one-query call of it).
     *
-    * Block pruning (J3 on the batch path): the same driver-side
-    * block-coverage intersection the single-query path runs is applied PER
-    * QUERY over the collected df/128 metadata, and the union of every
+    * Block pruning (J3): per query, the candidate docId space is the
+    * intersection of its terms' block coverage over the collected df/128
+    * metadata (the union for a disjunctive query), and the union of every
     * query's surviving (term, firstDocId) keys is the only set of blocks
     * decoded — a hot∧hot∧...∧rare batch decodes the hot terms only where
-    * the rare terms have coverage, instead of the full index. Exactness:
-    * range pruning is conservative per query (a doc matching ALL of a
-    * query's terms lies in every term's coverage, hence in the
-    * intersection), and extra blocks decoded for one query only add
-    * candidate rows for another that its own `nMatched == nTerms`
-    * conjunctive filter discards.
+    * the rare terms have coverage. Exactness: range pruning is
+    * conservative per query (a doc matching ALL of a query's terms lies in
+    * every term's coverage, hence in the intersection), and extra blocks
+    * decoded for one query only add candidate rows for another that its
+    * own `nMatched == nTerms` conjunctive filter discards.
     *
-    * WAND θ-prune (BMW on the batch path — the hot∧hot case range pruning
-    * cannot touch): queries whose range-surviving posting estimate exceeds
+    * WAND θ-prune (BMW — the hot∧hot case range pruning cannot touch):
+    * queries whose range-surviving posting estimate exceeds
     * `wandMinPostings` share ONE pilot job — each contributes its
     * highest-ceiling candidate intervals ([[BlockMax.pilotIntervals]]), the
     * union of pilot blocks is decoded once, and a per-query bounded heap
     * yields θ_q = that query's exact kth pilot score (kth-best is monotone
     * in set inclusion, so θ_q never exceeds the true kth score — pruning on
     * it is conservative). A block b of term t then survives query q only if
-    * mult_q(t)·ub_t(b) + Σ_{t'≠t∈q} mult_q(t')·maxUb(t', b.range) ≥ θ_q —
-    * the same exactness argument as [[search]]'s single-query BMW, per
-    * query. Cross-query block sharing is sound both ways: a conjunctive
-    * doc's `nMatched == nTerms` implies every one of its term rows was
-    * decoded (complete score), and a disjunctive doc's partial score only
-    * understates — a doc with true score ≥ θ_q has ALL blocks surviving, so
-    * every top-k member scores in full.
+    * mult_q(t)·ub_t(b) + Σ_{t'≠t∈q} mult_q(t')·maxUb(t', b.range) ≥ θ_q:
+    * that upper-bounds ANY doc in b's total score, so every block of a doc
+    * with true score ≥ θ_q survives. Cross-query block sharing is sound
+    * both ways: a conjunctive doc's `nMatched == nTerms` implies every one
+    * of its term rows was decoded (complete score), and a disjunctive doc's
+    * partial score only understates.
     *
-    * Query ids listed in `disjunctive` evaluate in OR mode (the prefix /
-    * SearchOperator::OR semantics of [[search]]'s `conjunctive = false`):
-    * absent terms contribute nothing instead of voiding the query, block
-    * coverage is the union of the present terms' coverage, and the
-    * `nMatched == nTerms` filter does not apply.
-    *
-    * `excludes` maps a queryId to its NOT terms (Lucene MUST_NOT): matching
-    * docs must contain none of them. Exclusion blocks are decoded only
-    * where they overlap the query's candidate ranges (the skip-pruned
-    * exclusion of [[search]]), and the (queryId, docId) exclusion pairs
-    * anti-join the scored rows in BOTH the pilot and the main job — θ_q is
-    * therefore computed over post-exclusion docs, never over-pruning. */
+    * Per-query inputs, keyed by queryId:
+    *  - `disjunctive`: OR mode (the prefix / SearchOperator::OR semantics,
+    *    declared `types.h:70` but never implemented by the reference) —
+    *    absent terms contribute nothing instead of voiding the query (P2,
+    *    `qq_mem_engine.h:345-347`), coverage is the union, and the
+    *    `nMatched == nTerms` filter does not apply;
+    *  - `excludes`: NOT terms (Lucene MUST_NOT), skip-pruned
+    *    ([[exclusionPairs]]); a conjunctive query with a required term
+    *    that is also excluded is unsatisfiable;
+    *  - `boosts`: per-term query-time boost (Lucene `term^B`);
+    *  - `after`: the search_after cursor (score, docId).
+    * Exclusions, tombstones and cursors filter the pilot AND the main job
+    * ([[admitted]]), so θ_q is computed over admissible docs only.
+    * Returns (queryId, rank, docId, score). */
   def searchAll(ix: LoadedIndex, queries: Seq[(Int, Seq[String])], k: Int,
                 disjunctive: Set[Int] = Set.empty,
                 excludes: Map[Int, Seq[String]] = Map.empty,
                 wandMinPostings: Long = 50000L,
-                boosts: Map[Int, Map[String, Double]] = Map.empty): DataFrame = {
+                boosts: Map[Int, Map[String, Double]] = Map.empty,
+                after: Map[Int, (Double, Int)] = Map.empty): DataFrame = {
     val spark = ix.spark
     import spark.implicits._
-    def empty =
-      Seq.empty[(Int, Int, Int, Double)].toDF("queryId", "rank", "docId", "score")
+    requirePositive(boosts)
     val allTerms = queries.flatMap(_._2).distinct
-    if (allTerms.isEmpty || k <= 0) return empty
+    if (allTerms.isEmpty || k <= 0) return emptyRows(spark)
     // one stats fetch covers positive AND exclusion terms (the latter so
     // the exclusion meta fetch can df-estimate its direct-path escape)
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(
-        (allTerms ++ excludes.valuesIterator.flatten).distinct: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs = termDfs(ix, (allTerms ++ excludes.valuesIterator.flatten).distinct)
     val idfs = dfs.map { case (t, d) => t -> Bm25.idf(ix.nDocs, d) }
-    // P2 guard: a conjunctive query is live only if EVERY term exists; a
-    // disjunctive one if ANY does (absent terms drop out of its term list).
-    // A conjunctive query with a required term that is also excluded is
-    // unsatisfiable by construction (same rule as [[search]]).
-    // A repeated term scores once per slot → carry multiplicity as a weight.
     val live = queries
       .map { case (qid, ts) =>
         (qid, if (disjunctive(qid)) ts.filter(dfs.contains) else ts)
@@ -1246,24 +990,19 @@ object Searcher {
         ts.nonEmpty && (disjunctive(qid) || ts.forall(dfs.contains)) &&
           (disjunctive(qid) || !excludes.getOrElse(qid, Nil).exists(ts.contains))
       }
-    if (live.isEmpty) return empty
+    if (live.isEmpty) return emptyRows(spark)
     val liveTerms = live.flatMap(_._2).distinct
-    // one row per query SLOT (repeated terms are separate slots): scores
-    // are re-added in slot order by the codegen'd SlotOrderedSum below, so
-    // engine scores are bitwise-deterministic and bitwise-identical to the
-    // oracle's slot loop (`scoring.h:133-142`) — an order-free
-    // sum(partScore) differs by ulps run to run, which flips rank ties
-    // between equal-score docs. `firstSlot` marks each distinct term's
-    // first slot so nMatched is a conditional count (no countDistinct
-    // Expand rewrite).
-    // per-slot query-time boost (Lucene `term^B`; log syntax `if^2`):
-    // multiplies the slot's idf weight in the SAME association order as the
-    // single-query path and the oracle ((idf·B)·tfNorm), so boosted scores
-    // stay bitwise-identical across all three paths
+    // one row per query SLOT (a repeated term scores once per slot,
+    // `scoring.h:133-142`): scores are re-added in slot order by the
+    // codegen'd SlotOrderedSum below, so engine scores are
+    // bitwise-deterministic and bitwise-identical to the oracle's slot loop
+    // — an order-free sum(partScore) differs by ulps run to run, which
+    // flips rank ties between equal-score docs. `firstSlot` marks each
+    // distinct term's first slot so nMatched is a conditional count (no
+    // countDistinct Expand rewrite). The boost multiplies the slot's idf in
+    // the oracle's association order ((idf·B)·tfNorm).
     def boostOf(qid: Int, t: String): Double =
       boosts.getOrElse(qid, Map.empty).getOrElse(t, 1.0)
-    require(boosts.valuesIterator.flatMap(_.valuesIterator).forall(_ > 0.0),
-      "boosts must be positive")
     val q = live.flatMap { case (qid, ts) =>
       ts.zipWithIndex.map { case (t, slot) =>
         (qid, t, ts.distinct.size, slot, disjunctive(qid), ts.indexOf(t) == slot,
@@ -1272,8 +1011,7 @@ object Searcher {
     }.toDF("queryId", "term", "nTerms", "slot", "disj", "firstSlot", "boost")
     // ---- per-query block-range pruning over collected block metadata ----
     // ub = idf · tfNorm(maxTf, minLenByte): the BMW score ceiling, PER-TERM
-    // base (query-slot multiplicity is applied per query at filter time)
-    val cache = ix.lossyCache
+    // base (query-slot multiplicity and boost are applied per query)
     val blocksAll = ix.postings.filter($"term".isin(liveTerms: _*))
     // one [[MetaStore]] fetch for the whole batch: coverage = union over
     // queries of each query's AND/OR shape
@@ -1286,7 +1024,7 @@ object Searcher {
       .map { case (t, rs) =>
         val idf = idfs(t)
         t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, r._4,
-          idf * Bm25.tfNormLossy(r._5.toLong, r._6, cache)))
+          idf * Bm25.tfNormLossy(r._5.toLong, r._6, ix.lossyCache)))
       }
     // per-query plan: candidate coverage + range-surviving blocks.
     // `wt` = slot multiplicity · boost per unique term — the factor a term's
@@ -1315,54 +1053,12 @@ object Searcher {
         }
       }
     }
-    if (plans.isEmpty) return empty
-
-    // ---- skip-pruned exclusion pairs (queryId, docId) ----
-    val allEx = live.flatMap { case (qid, _) => excludes.getOrElse(qid, Nil) }.distinct
-    val exPairs: Option[DataFrame] =
-      if (allEx.isEmpty) None
-      else {
-        val exBlocksDf = ix.postings.filter($"term".isin(allEx: _*))
-        // meta bounded by the union of the live queries' candidate coverage
-        val exMeta: Map[String, Array[BlockMax.BlockMeta]] =
-          MetaStore.boundedRangeMeta(ix, allEx,
-              MetaStore.unionIv(plans.map(_.candidates)), dfs)
-            .groupBy(_._1).map { case (t, rs) =>
-              t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, 0, 0.0))
-            }
-        // only exclusion blocks overlapping that query's candidate coverage
-        val exKeys: Set[(String, Int)] = plans.iterator.flatMap { p =>
-          excludes.getOrElse(p.qid, Nil).distinct.iterator.flatMap { t =>
-            exMeta.get(t).iterator.flatMap { m =>
-              BlockMax.overlapping(m, p.candidates).iterator.map(i => (t, m(i).first))
-            }
-          }
-        }.toSet
-        if (exKeys.isEmpty) None
-        else {
-          val qExDf = broadcast(plans
-            .flatMap(p => excludes.getOrElse(p.qid, Nil).distinct.map(t => (p.qid, t)))
-            .toDF("queryId", "term"))
-          Some(exBlocksDf
-            .join(broadcast(exKeys.toSeq.toDF("term", "firstDocId")),
-              Seq("term", "firstDocId"), "left_semi")
-            .select("term", "prevDocId", "n", "docIds", "tfs")
-            .as[(String, Int, Int, Array[Byte], Array[Byte])]
-            .flatMap { case (t, prev, n, ids, tfs) =>
-              PostingCodec.decodeDocIdTf(prev, n, ids, tfs).iterator.map(p => (t, p._1))
-            }
-            .toDF("term", "docId")
-            .join(qExDf, "term")
-            .select("queryId", "docId").distinct())
-        }
-      }
+    if (plans.isEmpty) return emptyRows(spark)
+    val exPairs = exclusionPairs(ix, plans.map(p => p.qid -> p.candidates), excludes, dfs)
 
     // ---- shared scoring pipeline (pilot and main decode different keys) ----
     val idfDf = broadcast(idfs.toSeq.toDF("term", "idf"))
-    val cacheLit = array(cache.map(lit).toSeq: _*)
-    // (idf·boost)·tfNorm — the same association order as the single-query
-    // path's driver-side idf·boost slot weight (mult by 1.0 is IEEE-exact,
-    // so unboosted queries are unchanged bitwise)
+    val cacheLit = array(ix.lossyCache.map(lit).toSeq: _*)
     val partScore = ($"idf" * $"boost") *
       ($"tf" * lit(Bm25.K1 + 1.0) / ($"tf" + element_at(cacheLit, $"lenByte" + 1)))
     // surviving block keys as a broadcast semi-join, not a scalar UDF —
@@ -1370,9 +1066,7 @@ object Searcher {
     // terms' block counts (already collected driver-side as `metaRaw`)
     def scoreRows(keys: Set[(String, Int)]): DataFrame = {
       val keysDf = broadcast(keys.toSeq.toDF("term", "firstDocId"))
-      // norms ride the decode ([[decodedScoreRows]]): no per-doc join in
-      // the batch scoring pipeline — the fanned-out posting rows never
-      // shuffle against a corpus-sized doc-length table.
+      // norms ride the decode ([[decodedScoreRows]]): no per-doc join.
       // Measured negative result: repartitioning the decoded postings by
       // docId before the fan-out join (to make the aggregate below
       // exchange-free) ran 2x SLOWER on the 2.4M-doc log — it shuffles
@@ -1380,9 +1074,8 @@ object Searcher {
       // barrier, while the aggregate's own exchange carries post-partial-agg
       // rows keyed by compact ints and the log's fan-out factor is only
       // ~1-2x (few queries share a term). Keep decode→score one fused stage.
-      val posting = decodedScoreRows(ix,
-        blocksAll.join(keysDf, Seq("term", "firstDocId"), "left_semi"))
-      val scored = posting
+      val scored = decodedScoreRows(ix,
+          blocksAll.join(keysDf, Seq("term", "firstDocId"), "left_semi"))
         .join(broadcast(q), "term")
         .join(idfDf, "term")
         .withColumn("partScore", partScore)
@@ -1392,48 +1085,27 @@ object Searcher {
         .withColumn("score", graft.functions.functions.slot_sum($"sps"))
         .filter($"disj" || $"nMatched" === $"nTerms")
         .select($"queryId", $"docId".cast("int"), $"score")
-      // NOT-term exclusion, then delete tombstones: doc-level anti-joins
-      // before the top-k heaps (stats stay pre-delete — Lucene semantics,
-      // same as Searcher.search)
-      val afterEx = exPairs
-        .map(e => scored.join(e, Seq("queryId", "docId"), "left_anti"))
-        .getOrElse(scored)
-      ix.tombstones.map(d => afterEx.join(d, Seq("docId"), "left_anti"))
-        .getOrElse(afterEx)
+      admitted(ix, scored, exPairs, after)
     }
-    // per-query exact top-k via the bounded-heap Aggregator (A5): partial
-    // per-partition heaps + pairwise merge — no per-query full sort (a
-    // window row_number would sort every matched doc)
-    def topKOf(df: DataFrame) = df
-      .select($"queryId", $"docId", $"score")
-      .as[(Int, Int, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(new TopKAggregator(k).toColumn)
+    def keysOf(t: String, idxs: Array[Int]): Iterator[(String, Int)] =
+      idxs.iterator.map(i => (t, meta(t)(i).first))
 
     // ---- batched WAND pilot: one job, per-query θ ----
     val wandPlans = plans.filter(_.estPostings > wandMinPostings)
-    val thetas: Map[Int, Double] =
-      if (wandPlans.isEmpty) Map.empty
-      else {
-        val pilotKeys: Set[(String, Int)] = wandPlans.iterator.flatMap { p =>
-          val perTermScaled = p.uniq.map { t =>
-            val w = p.wt(t)
-            meta(t).map(b => if (w == 1.0) b else b.copy(ub = b.ub * w))
-          }
-          val iv = BlockMax.pilotIntervals(perTermScaled,
-            BlockMax.refineByBlocks(perTermScaled, p.candidates),
-            targetDocs = math.max(64L * k, 1024L), disjunctive = p.disj)
-          p.uniq.iterator.flatMap { t =>
-            val m = meta(t)
-            BlockMax.overlapping(m, iv).iterator.map(i => (t, m(i).first))
-          }
-        }.toSet
-        if (pilotKeys.isEmpty) Map.empty
-        else topKOf(scoreRows(pilotKeys)).collect().iterator.map { case (qid, top) =>
-          qid -> (if (top.size >= k) top.last._2 else Double.NegativeInfinity)
-        }.toMap
+    val pilotKeys: Set[(String, Int)] = wandPlans.iterator.flatMap { p =>
+      val perTermScaled = p.uniq.map { t =>
+        val w = p.wt(t)
+        meta(t).map(b => if (w == 1.0) b else b.copy(ub = b.ub * w))
       }
+      val iv = BlockMax.pilotIntervals(perTermScaled,
+        BlockMax.refineByBlocks(perTermScaled, p.candidates),
+        targetDocs = math.max(64L * k, 1024L), disjunctive = p.disj)
+      p.uniq.iterator.flatMap(t => keysOf(t, BlockMax.overlapping(meta(t), iv)))
+    }.toSet
+    val thetas: Map[Int, Double] =
+      if (pilotKeys.isEmpty) Map.empty
+      else topKRows(scoreRows(pilotKeys), k).filter($"rank" === k)
+        .select($"queryId", $"score").as[(Int, Double)].collect().toMap
 
     // ---- final per-query selection: range survivors filtered by θ ----
     val neededKeys: Set[(String, Int)] = plans.iterator.flatMap { p =>
@@ -1441,138 +1113,200 @@ object Searcher {
       p.uniq.iterator.flatMap { t =>
         val m = meta(t)
         val wtT = p.wt(t)
-        val idxs =
+        keysOf(t,
           if (th == Double.NegativeInfinity) p.rangeSel(t)
           else p.rangeSel(t).filter { i =>
             val b = m(i)
             val others = p.uniq.iterator.filter(_ != t)
               .map(t2 => p.wt(t2) * BlockMax.maxUbIn(meta(t2), b.first, b.last)).sum
             b.ub * wtT + others >= th - 1e-9
-          }
-        idxs.iterator.map(i => (t, m(i).first))
+          })
       }
     }.toSet
-    lastBatchDiag.set((metaRaw.iterator.map(_._4.toLong).sum,
-      metaRaw.iterator.filter(r => neededKeys((r._1, r._2))).map(_._4.toLong).sum))
-    if (neededKeys.isEmpty) return empty
-    topKOf(scoreRows(neededKeys))
-      .flatMap { case (qid, top) =>
-        top.iterator.zipWithIndex.map { case ((d, s), i) => (qid, i + 1, d, s) }
-      }
-      .toDF("queryId", "rank", "docId", "score")
+    val rangeKeys = plans.iterator.flatMap(p => p.uniq.iterator.flatMap(t =>
+      keysOf(t, p.rangeSel(t)))).toSet
+    publishDiag(live.size, liveTerms.size, metaRaw, rangeKeys, neededKeys, pilotKeys,
+      wandPlans.size)
+    if (neededKeys.isEmpty) return emptyRows(spark)
+    topKRows(scoreRows(neededKeys), k)
   }
 
-  /** Batch PHRASE search: every phrase query of a log in ONE Spark job
-    * (the phrase analog of [[searchAll]] — [[QueryLog.run]] previously ran
-    * a full multi-stage [[search]] pipeline per phrase query, paying
-    * per-query metadata collects and driver round-trips).
+  private def publishDiag(nQueries: Int, nTerms: Int,
+                          metaRaw: Array[(String, Int, Int, Int, Int, Int)],
+                          rangeKeys: Set[(String, Int)], neededKeys: Set[(String, Int)],
+                          pilotKeys: Set[(String, Int)], wandQueries: Int): Unit = {
+    def postingsIn(keys: Set[(String, Int)]): Long =
+      metaRaw.iterator.filter(r => keys((r._1, r._2))).map(_._4.toLong).sum
+    lastDiag.set(BlockMax.Diag(nQueries, nTerms, metaRaw.length.toLong,
+      metaRaw.iterator.map(_._4.toLong).sum, rangeKeys.size.toLong,
+      neededKeys.size.toLong, postingsIn(pilotKeys), postingsIn(neededKeys),
+      wandQueries))
+  }
+
+  /** Batch PHRASE search: every phrase query of a log in ONE Spark job,
+    * and the only phrase pipeline ([[search]]'s phrase mode is a one-query
+    * call of it).
     *
-    * Same semantics as the single-query phrase path (`query_processing.h`
-    * per-slot leapfrog): per query, block coverage is the intersection of
-    * its terms' block ranges; only the union of surviving blocks across the
-    * batch is position-decoded; a (query, doc) group matches when every
-    * distinct term is present and the slot-wise adjusted position lists
-    * intersect ([[graft.core.Oracle.phraseMatch]] — repeated terms reuse
-    * one list at different shifts; a per-query `slops` entry > 0 relaxes
-    * the check to ordered proximity, [[graft.core.Oracle.proximityMatch]]).
-    * Matched docs score conjunctive BM25
-    * with per-slot idf multiplicity, then a bounded per-query top-k heap.
+    * Per query (`query_processing.h` per-slot leapfrog): block coverage is
+    * the intersection of its terms' block ranges; only the union of
+    * surviving blocks across the batch is position-decoded; a (query, doc)
+    * group matches when every distinct term is present and the slot-wise
+    * adjusted position lists intersect ([[graft.core.Oracle.phraseMatch]]
+    * — repeated terms reuse one list at different shifts). Matched docs
+    * score conjunctive BM25 with per-slot idf multiplicity, then a bounded
+    * per-query top-k heap.
     *
-    * The J5 bloom semi-join is not consulted here: it is a serving-path
-    * candidate pruner, while the batch path's cost is bounded up front by
-    * the block-range intersection; the positional check is exact either
-    * way. Returns (queryId, rank, docId, score). */
+    * Per-query inputs, keyed by queryId:
+    *  - `slops`: > 0 relaxes the check to ordered proximity
+    *    ([[graft.core.Oracle.proximityMatch]]);
+    *  - `shifts`: explicit per-slot position shifts (analyzed-query gaps,
+    *    Lucene match_phrase semantics; exact phrase only, strictly
+    *    increasing, one per slot — [[graft.core.Oracle.phraseMatchAt]]);
+    *  - `excludes`, `boosts`, `after`: as in [[searchAll]];
+    *  - `bloomFactors`: the reference's `bloom_enable_factor`
+    *    (`query_processing.h:795-807`; absent = [[BloomNeverUse]]). The J5
+    *    bloom semi-join is lossy-positive, so the positional check stays
+    *    exact. For a 2-term phrase the probe direction is cost-ruled by
+    *    posting-list sizes — `factor*df1 <= df2` probes term1's END filter
+    *    for term2, `factor*df2 < df1` probes term2's BEGIN filter for
+    *    term1, comparable sizes skip the bloom; k>2 falls back to the
+    *    end-filter chain over adjacent pairs (`CheckBloomFallBack`). Bloom
+    *    filters encode ADJACENCY, so proximity and gapped-shift queries
+    *    never probe. [[QueryLog.run]] leaves the probe off: the batch
+    *    path's cost is bounded up front by the block-range intersection.
+    * Returns (queryId, rank, docId, score). */
   def searchAllPhrase(ix: LoadedIndex, queries: Seq[(Int, Seq[String])], k: Int,
-                      slops: Map[Int, Int] = Map.empty): DataFrame = {
+                      slops: Map[Int, Int] = Map.empty,
+                      excludes: Map[Int, Seq[String]] = Map.empty,
+                      boosts: Map[Int, Map[String, Double]] = Map.empty,
+                      shifts: Map[Int, Seq[Int]] = Map.empty,
+                      bloomFactors: Map[Int, Int] = Map.empty,
+                      after: Map[Int, (Double, Int)] = Map.empty): DataFrame = {
     val spark = ix.spark
     import spark.implicits._
-    def empty = Seq.empty[(Int, Int, Int, Double)].toDF("queryId", "rank", "docId", "score")
+    require(slops.valuesIterator.forall(_ >= 0), "slop must be non-negative")
+    requirePositive(boosts)
+    val byId = queries.toMap
+    require(shifts.forall { case (qid, sh) =>
+        slops.getOrElse(qid, 0) == 0 && byId.get(qid).exists(_.size == sh.size) &&
+          sh.sliding(2).forall { case Seq(a, b) => a < b; case _ => true }
+      }, "phraseShifts require an exact phrase and strictly increasing shifts")
     val allTerms = queries.flatMap(_._2).distinct
-    if (allTerms.isEmpty || k <= 0) return empty
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(allTerms: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
-    // P2 guard — phrase queries are conjunctive by definition
-    val live = queries.filter(q => q._2.nonEmpty && q._2.forall(dfs.contains))
-    if (live.isEmpty) return empty
+    if (allTerms.isEmpty || k <= 0) return emptyRows(spark)
+    val dfs = termDfs(ix, (allTerms ++ excludes.valuesIterator.flatten).distinct)
+    // P2 guard — phrase queries are conjunctive by definition, so a
+    // required term that is also excluded is unsatisfiable
+    val live = queries.filter { case (qid, ts) =>
+      ts.nonEmpty && ts.forall(dfs.contains) &&
+        !excludes.getOrElse(qid, Nil).exists(ts.contains)
+    }
+    if (live.isEmpty) return emptyRows(spark)
     val liveTerms = live.flatMap(_._2).distinct
-    // one row per (query, SLOT): a repeated term scores once per slot
-    // (`scoring.h:133-142`), and the per-slot pivot below re-adds the
-    // contributions in slot order — bitwise-identical to the oracle's loop
-    // (an order-free sum differs by ulps and flips rank ties; see
-    // [[searchAll]])
+    // one row per (query, SLOT) with the slot weight idf·boost (see
+    // [[searchAll]] for the slot-ordered sum)
     val idfW = live.flatMap { case (qid, ts) =>
       ts.zipWithIndex.map { case (t, slot) =>
-        (qid, t, slot, Bm25.idf(ix.nDocs, dfs(t)))
+        (qid, t, slot,
+          Bm25.idf(ix.nDocs, dfs(t)) * boosts.getOrElse(qid, Map.empty).getOrElse(t, 1.0))
       }
     }.toDF("queryId", "term", "slot", "idf")
     // ---- per-query block-range intersection over collected metadata ----
     val blocksAll = ix.postings.filter($"term".isin(liveTerms: _*))
     val metaRaw = MetaStore.fineMeta(ix, blocksAll, liveTerms, dfs,
       live.map(_._2.distinct.map(Seq(_))))
-    val meta: Map[String, Array[BlockMax.BlockMeta]] = metaRaw.groupBy(_._1)
-      .map { case (t, rs) =>
-        t -> rs.sortBy(_._2).map(r => BlockMax.BlockMeta(r._2, r._3, r._4, 0.0))
-      }
-    val neededKeys: Set[(String, Int)] = live.iterator.flatMap { case (_, ts) =>
-      val uniq = ts.distinct
-      val perTerm = uniq.map(t => meta.getOrElse(t, Array.empty[BlockMax.BlockMeta]))
-      if (perTerm.exists(_.isEmpty)) Iterator.empty
-      else {
-        val cand = BlockMax.intersectCoverage(perTerm)
-        uniq.iterator.flatMap { t =>
-          val m = meta(t)
-          BlockMax.overlapping(m, cand).iterator.map(i => (t, m(i).first))
-        }
+    val meta = rangesByTerm(metaRaw.map(r => (r._1, r._2, r._3)))
+    val cands: Seq[(Int, Array[(Int, Int)])] = live.flatMap { case (qid, ts) =>
+      val perTerm = ts.distinct.map(t => meta.getOrElse(t, Array.empty[BlockMax.BlockMeta]))
+      if (perTerm.exists(_.isEmpty)) None
+      else Some(qid -> BlockMax.intersectCoverage(perTerm))
+    }
+    val neededKeys: Set[(String, Int)] = cands.iterator.flatMap { case (qid, cand) =>
+      byId(qid).distinct.iterator.flatMap { t =>
+        val m = meta(t)
+        BlockMax.overlapping(m, cand).iterator.map(i => (t, m(i).first))
       }
     }.toSet
-    if (neededKeys.isEmpty) return empty
+    publishDiag(live.size, liveTerms.size, metaRaw, neededKeys, neededKeys, Set.empty, 0)
+    if (neededKeys.isEmpty) return emptyRows(spark)
+    val exPairs = exclusionPairs(ix, cands, excludes, dfs)
     val keysDf = broadcast(neededKeys.toSeq.toDF("term", "firstDocId"))
-    // decode (docIds, tfs, positions) of surviving blocks once for the
-    // batch; the inline norm stream rides along (lenByte = -1 on a legacy
-    // index → the scoring join fallback below)
-    val inlineLen = ix.hasInlineLen
-    val pruned = blocksAll.join(keysDf, Seq("term", "firstDocId"), "left_semi")
-    val decoded = (
-      if (inlineLen)
-        pruned.select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes", "positions")
-          .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-          .flatMap { case (t, prev, n, ids, tfs, lbs, pos) =>
-            val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-            val lb = PostingCodec.decodeLenBytes(n, lbs)
-            val ps = PostingCodec.decodePositions(n, pos)
-            dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, ps(i), lb(i)) }
-          }
-      else
-        pruned.select("term", "prevDocId", "n", "docIds", "tfs", "positions")
-          .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-          .flatMap { case (t, prev, n, ids, tfs, pos) =>
-            val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-            val ps = PostingCodec.decodePositions(n, pos)
-            dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, ps(i), -1) }
-          }
-    ).toDF("term", "docId", "tf", "pos", "lenByte")
-    // attach each decoded posting to every live query using that term, then
-    // run the per-slot positional intersection per (query, doc) group
+    // decode (docIds, tfs, norms, positions) of surviving blocks once for
+    // the batch
+    val decoded = blocksAll.join(keysDf, Seq("term", "firstDocId"), "left_semi")
+      .select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes", "positions")
+      .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
+      .flatMap { case (t, prev, n, ids, tfs, lbs, pos) =>
+        val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
+        val lb = PostingCodec.decodeLenBytes(n, lbs)
+        val ps = PostingCodec.decodePositions(n, pos)
+        dt.iterator.zipWithIndex.map { case ((d, tf), i) => (t, d, tf, ps(i), lb(i)) }
+      }
+      .toDF("term", "docId", "tf", "pos", "lenByte")
+    // attach each decoded posting to every live query using that term
     val qTermDf = broadcast(live.flatMap { case (qid, ts) =>
       ts.distinct.map(t => (qid, t))
     }.toDF("queryId", "term"))
-    val bcQ = spark.sparkContext.broadcast(live.toMap)
-    val bcSlops = spark.sparkContext.broadcast(slops)
-    val matched = decoded
-      .join(qTermDf, "term")
+    val perQuery = decoded.join(qTermDf, "term")
       .select($"queryId", $"docId", $"term", $"tf", $"pos", $"lenByte")
+    // (J5) bloom semi-join: each check is (rowTerm, probe, useEnd) — read
+    // rowTerm's filter for this doc and test `probe` against its end
+    // (successor) or begin (predecessor) side
+    val checks: Map[Int, Seq[(String, String, Boolean)]] = live.flatMap { case (qid, ts) =>
+      val factor = bloomFactors.getOrElse(qid, BloomNeverUse)
+      val gapped = shifts.get(qid).exists(sh => !sh.indices.forall(i => sh(i) == sh.head + i))
+      val cs =
+        if (factor == BloomNeverUse || ts.size < 2 || slops.getOrElse(qid, 0) > 0 || gapped)
+          Nil
+        else if (ts.size == 2) {
+          val (a, b) = (ts.head, ts(1))
+          if (factor.toLong * dfs(a) <= dfs(b)) Seq((a, b, true))     // end-probe a→b
+          else if (factor.toLong * dfs(b) < dfs(a)) Seq((b, a, false)) // begin-probe b←a
+          else Nil                                                     // comparable: skip
+        } else ts.sliding(2).map(p => (p.head, p(1), true)).toSeq
+      if (cs.isEmpty) None else Some(qid -> cs)
+    }.toMap
+    val candidates = (if (checks.isEmpty) None else ix.bloom) match {
+      case None => perQuery
+      case Some(bdf) =>
+        val bcChecks = spark.sparkContext.broadcast(checks)
+        val passing = bdf
+          .filter($"term".isin(checks.valuesIterator.flatten.map(_._1).toSeq.distinct: _*))
+          .select("term", "docId", "beginBits", "endBits", "k")
+          .as[(String, Int, Array[Byte], Array[Byte], Int)]
+          .groupByKey(_._2)
+          .flatMapGroups { (docId, rows) =>
+            val m = rows.map(r => r._1 -> ((r._3, r._4, r._5))).toMap
+            bcChecks.value.iterator.collect { case (qid, cs) if cs.forall {
+                case (rowTerm, probe, useEnd) =>
+                  m.get(rowTerm).exists { case (begin, end, kk) =>
+                    new graft.index.Bloom.Filter(if (useEnd) end else begin, kk)
+                      .mightContain(probe)
+                  }
+              } => (qid, docId)
+            }
+          }.toDF("queryId", "docId").withColumn("bloomOk", lit(true))
+        perQuery.join(passing, Seq("queryId", "docId"), "left_outer")
+          .filter($"bloomOk".isNotNull || !$"queryId".isin(checks.keys.toSeq: _*))
+          .drop("bloomOk")
+    }
+    // per-slot positional intersection per (query, doc) group
+    val bcQ = spark.sparkContext.broadcast(live.map { case (qid, ts) =>
+      qid -> ((ts, slops.getOrElse(qid, 0), shifts.get(qid)))
+    }.toMap)
+    val matched = candidates
       .as[(Int, Int, String, Int, Array[Int], Int)]
       .groupByKey(r => (r._1, r._2))
       .flatMapGroups { (key: (Int, Int), rows: Iterator[(Int, Int, String, Int, Array[Int], Int)]) =>
         val (qid, docId) = key
         val byTerm = rows.toArray.groupBy(_._3)
-        val qts = bcQ.value(qid)
-        val slop = bcSlops.value.getOrElse(qid, 0)
+        val (qts, slop, sh) = bcQ.value(qid)
         val posOk = qts.distinct.forall(byTerm.contains) && {
           val posLists = qts.map(t => byTerm(t).head._5)
-          if (slop == 0) graft.core.Oracle.phraseMatch(posLists)
-          else graft.core.Oracle.proximityMatch(posLists, slop)
+          sh match {
+            case Some(s) => graft.core.Oracle.phraseMatchAt(posLists, s)
+            case None if slop == 0 => graft.core.Oracle.phraseMatch(posLists)
+            case None => graft.core.Oracle.proximityMatch(posLists, slop)
+          }
         }
         if (posOk) byTerm.valuesIterator.map(_.head).map(r => (qid, docId, r._3, r._4, r._6))
         else Iterator.empty
@@ -1580,27 +1314,13 @@ object Searcher {
     val cacheLit = array(ix.lossyCache.map(lit).toSeq: _*)
     val partScore = $"idf" *
       ($"tf" * lit(Bm25.K1 + 1.0) / ($"tf" + element_at(cacheLit, $"lenByte" + 1)))
-    val phraseScored = (
-        if (inlineLen) matched
-        else matched.drop("lenByte").join(ix.doclen.select("docId", "lenByte"), "docId")
-      )
+    val phraseScored = matched
       .join(broadcast(idfW), Seq("queryId", "term"))
       .withColumn("partScore", partScore)
       .groupBy($"queryId", $"docId")
       .agg(collect_list(struct($"slot", $"partScore")).as("sps"))
       .withColumn("score", graft.functions.functions.slot_sum($"sps"))
       .select($"queryId", $"docId".cast("int"), $"score")
-    // delete tombstones, same contract as searchAll
-    ix.tombstones.map(d => phraseScored.join(d, Seq("docId"), "left_anti"))
-      .getOrElse(phraseScored)
-      .select($"queryId", $"docId", $"score")
-      .as[(Int, Int, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(new TopKAggregator(k).toColumn)
-      .flatMap { case (qid, top) =>
-        top.iterator.zipWithIndex.map { case ((d, s), i) => (qid, i + 1, d, s) }
-      }
-      .toDF("queryId", "rank", "docId", "score")
+    topKRows(admitted(ix, phraseScored, exPairs, after), k)
   }
 }

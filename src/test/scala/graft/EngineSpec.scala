@@ -592,7 +592,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = all.getOrElse(qid, Array.empty).sortBy(_._2)
       assert(got.map(_._3).toSeq == want.map(_.docId), s"batch mismatch q$qid $terms")
     }
-    val (total, decoded) = Searcher.lastBatchDiag.get()
+    val diag = Searcher.lastDiag.get()
+    val (total, decoded) = (diag.totalPostings, diag.decodedPostings)
     assert(decoded > 0, "diag not published")
     assert(decoded < total / 2,
       s"batch path decoded $decoded of $total postings — block pruning not effective")
@@ -715,9 +716,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("batch searchAll: NOT queries, disjunctive members, forced WAND — per-query parity") {
     import spark.implicits._
     // NOT queries folded into the batch (per-query skip-pruned exclusion
-    // anti-join), disjunctive (OR) members, and the batched WAND pilot all
-    // active at once; every query must stay rank- AND score-identical to
-    // the oracle. Includes the unsatisfiable required∧excluded case.
+    // anti-join), disjunctive (OR) members, search_after cursors, and the
+    // batched WAND pilot all active at once; every query must stay rank-
+    // AND score-identical to the oracle and to the one-query wrapper.
+    // Includes the unsatisfiable required∧excluded case.
     val conjCases = Seq(
       (0, Seq("epsilon"), Seq("return")),            // rare +, hot −
       (1, Seq("if", "return"), Seq("val")),          // hot∧hot, hot −
@@ -729,33 +731,50 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val orCases = Seq(
       (7, Seq("epsilon", "posting"), Seq("return")), // OR with exclusion
       (8, Seq("if", "epsilon"), Nil))                // OR hot∨rare
-    val queries = (conjCases ++ orCases).map(c => (c._1, c._2))
-    val excludes = (conjCases ++ orCases).filter(_._3.nonEmpty).map(c => c._1 -> c._3).toMap
-    val disj = orCases.map(_._1).toSet
+    // cursor queries: past rank 4 of a hot∧hot conjunction (the same
+    // terms run cursor-free as q5) and past rank 2 of a hot OR with exclusion
+    val cur9 = Oracle.search(oracle, Seq("if", "return"), 10)(3)
+    val cur10 = Oracle.searchOr(oracle, Seq("if", "epsilon"), 10, Seq("epsilon"))(1)
+    val curCases = Seq((9, Seq("if", "return"), Nil, false, cur9),
+      (10, Seq("if", "epsilon"), Seq("epsilon"), true, cur10))
+    val queries = (conjCases ++ orCases).map(c => (c._1, c._2)) ++ curCases.map(c => (c._1, c._2))
+    val excludes = ((conjCases ++ orCases).map(c => c._1 -> c._3) ++
+      curCases.map(c => c._1 -> c._3)).filter(_._2.nonEmpty).toMap
+    val disj = orCases.map(_._1).toSet ++ curCases.filter(_._4).map(_._1)
+    val after = curCases.map(c => c._1 -> ((c._5.score, c._5.docId))).toMap
+    // oracle ranking strictly after a cursor in (score desc, docId asc)
+    def pastCursor(hits: Seq[Oracle.Hit], c: Oracle.Hit) = hits.filter(h =>
+      h.score < c.score || (h.score == c.score && h.docId > c.docId)).take(10)
+    val wants: Map[Int, Seq[Oracle.Hit]] =
+      conjCases.map { case (qid, q, ex) =>
+        qid -> (if (ex.exists(q.contains)) Nil else Oracle.search(oracle, q, 10, excludeTerms = ex))
+      }.toMap ++ orCases.map { case (qid, q, ex) =>
+        qid -> Oracle.searchOr(oracle, q, 10, excludeTerms = ex)
+      } ++ curCases.map { case (qid, q, ex, or, c) =>
+        qid -> pastCursor(
+          if (or) Oracle.searchOr(oracle, q, 1000, ex) else Oracle.search(oracle, q, 1000), c)
+      }
     // no-WAND pass (range pruning only), then forced-WAND pass
-    def run(wandMin: Long) = Searcher
-      .searchAll(ix, queries, 10, disj, excludes, wandMinPostings = wandMin)
-      .as[(Int, Int, Int, Double)].collect().groupBy(_._1)
-    val rangeOnly = run(Long.MaxValue)
-    val (_, decodedRange) = Searcher.lastBatchDiag.get()
-    val wand = run(0L)
-    val (_, decodedWand) = Searcher.lastBatchDiag.get()
-    assert(decodedWand <= decodedRange,
-      s"forced WAND decoded MORE ($decodedWand) than range-only ($decodedRange)")
-    Seq(rangeOnly, wand).foreach { all =>
-      conjCases.foreach { case (qid, q, ex) =>
-        val want =
-          if (ex.exists(q.contains)) Nil else Oracle.search(oracle, q, 10, excludeTerms = ex)
+    Seq(Long.MaxValue, 0L).foldLeft(Long.MaxValue) { (decodedRange, wandMin) =>
+      val all = Searcher
+        .searchAll(ix, queries, 10, disj, excludes, wandMinPostings = wandMin, after = after)
+        .as[(Int, Int, Int, Double)].collect().groupBy(_._1)
+      val decoded = Searcher.lastDiag.get().decodedPostings
+      assert(decoded <= decodedRange,
+        s"forced WAND decoded MORE ($decoded) than range-only ($decodedRange)")
+      queries.foreach { case (qid, q) =>
+        val want = wants(qid)
         val got = all.getOrElse(qid, Array.empty).sortBy(_._2)
-        assert(got.map(_._3).toSeq == want.map(_.docId), s"batch NOT mismatch q$qid $q -$ex")
+        assert(got.map(_._3).toSeq == want.map(_.docId), s"batch mismatch q$qid $q")
         got.zip(want).foreach { case (g, w) => assert(math.abs(g._4 - w.score) < 1e-9) }
+        // the one-query wrapper is the same pipeline: identical bits
+        val one = Searcher.search(ix, q, 10, wandMinPostings = wandMin,
+          conjunctive = !disj(qid), excludeTerms = excludes.getOrElse(qid, Nil),
+          after = after.get(qid)).collect().sortBy(_.rank)
+        assert(one.map(h => (h.docId, h.score)).toSeq == got.map(g => (g._3, g._4)).toSeq,
+          s"one-query wrapper diverges from the batch for q$qid $q")
       }
-      orCases.foreach { case (qid, q, ex) =>
-        val want = Oracle.searchOr(oracle, q, 10, excludeTerms = ex)
-        val got = all.getOrElse(qid, Array.empty).sortBy(_._2)
-        assert(got.map(_._3).toSeq == want.map(_.docId), s"batch OR mismatch q$qid $q -$ex")
-        got.zip(want).foreach { case (g, w) => assert(math.abs(g._4 - w.score) < 1e-9) }
-      }
+      decoded
     }
   }
 
@@ -831,8 +850,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.map(_.docId).toSeq == want.map(_.docId).toSeq)
       got.zip(want).foreach { case (g, w) => assert(math.abs(g.score - w.score) < 1e-9) }
       assert(diag.usedWand, s"wand not engaged: $diag")
-      assert(diag.decodedPostings < diag.totalPostings / 2,
-        s"θ-prune decoded ${diag.decodedPostings} of ${diag.totalPostings}: $diag")
+      // decoded = pilot job + main job
+      val decoded = diag.pilotPostings + diag.decodedPostings
+      assert(decoded < diag.totalPostings / 2,
+        s"θ-prune decoded $decoded of ${diag.totalPostings}: $diag")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
@@ -1184,6 +1205,61 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(0).nonEmpty && got(3).nonEmpty)
   }
 
+  test("batched phrase search: per-query cursor, NOT, boosts, shifts and bloom match the oracle") {
+    built
+    graft.index.Bloom.buildStage(spark, tmp) // the bloom cases probe it
+    import spark.implicits._
+    // mix: hot pair, medium pair, rare∧hot, repeated term, never-adjacent,
+    // absent term (P2 guard voids the whole phrase), then one query per
+    // per-query input, with plain queries over the same terms in the call
+    val ifRet = Seq("if", "return")
+    val cursor = Oracle.search(oracle, ifRet, 10, phrase = true)(2)
+    val bloomCases = for {
+      (f, i) <- Seq(Searcher.BloomNeverUse, 1, 4).zipWithIndex
+      (p, j) <- Seq(Seq("epsilon", "if"), Seq("if", "epsilon"), ifRet).zipWithIndex
+    } yield (20 + 3 * i + j, p, f)
+    val qs: Seq[(Int, Seq[String])] = Seq(
+      0 -> ifRet, 1 -> Seq("return", "val"),
+      2 -> Seq("int", "fn_0_0"), 3 -> Seq("if", "if"),
+      4 -> Seq("epsilon", "fn_1_0"), 5 -> Seq("if", "nosuchterm_xyz"),
+      6 -> ifRet, 7 -> ifRet, 8 -> Seq("return", "val"), 9 -> ifRet) ++
+      bloomCases.map(c => c._1 -> c._2)
+    val after = Map(6 -> ((cursor.score, cursor.docId)))
+    val excludes = Map(7 -> Seq("val"))
+    val boosts = Map(8 -> Map("return" -> 2.5))
+    val shifts = Map(9 -> Seq(0, 2)) // "if _ return"
+    val factors = bloomCases.map(c => c._1 -> c._3).toMap
+    val got = Searcher.searchAllPhrase(ix, qs, 10, excludes = excludes, boosts = boosts,
+        shifts = shifts, bloomFactors = factors, after = after)
+      .as[(Int, Int, Int, Double)].collect().groupBy(_._1)
+    qs.foreach { case (qid, terms) =>
+      val want =
+        if (qid == 6) Oracle.search(oracle, terms, 1000, phrase = true).filter(h =>
+          h.score < cursor.score || (h.score == cursor.score && h.docId > cursor.docId)).take(10)
+        else Oracle.search(oracle, terms, 10, phrase = true,
+          excludeTerms = excludes.getOrElse(qid, Nil), boosts = boosts.getOrElse(qid, Map.empty),
+          phraseShifts = shifts.get(qid))
+      val rows = got.getOrElse(qid, Array.empty).sortBy(_._2)
+      assert(rows.map(_._3).toSeq == want.map(_.docId), s"phrase batch q$qid $terms")
+      rows.map(_._4).zip(want.map(_.score)).foreach { case (g, w) =>
+        assert(math.abs(g - w) < 1e-9, s"phrase batch q$qid score")
+      }
+      // the one-query wrapper is the same pipeline: identical bits
+      val one = Searcher.search(ix, terms, 10, phrase = true,
+        bloomFactor = factors.getOrElse(qid, Searcher.BloomNeverUse),
+        excludeTerms = excludes.getOrElse(qid, Nil), after = after.get(qid),
+        boosts = boosts.getOrElse(qid, Map.empty), phraseShifts = shifts.get(qid))
+        .collect().sortBy(_.rank)
+      assert(one.map(h => (h.docId, h.score)).toSeq == rows.map(r => (r._3, r._4)).toSeq,
+        s"one-query phrase wrapper diverges from the batch for q$qid $terms")
+    }
+    assert(got.getOrElse(5, Array.empty).isEmpty) // absent term => empty
+    assert(got(0).nonEmpty && got(3).nonEmpty && got(6).nonEmpty)
+    // the NOT and boost cases must actually change the ranking
+    assert(got(7).map(_._3).toSet != got(0).map(_._3).toSet)
+    assert(got(8).map(_._4).toSeq != got(1).map(_._4).toSeq)
+  }
+
   test("query log: reference format parsed, batched run matches per-query") {
     built
     import spark.implicits._
@@ -1420,10 +1496,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Searcher.load(spark, tmp).nDocs == NDocs)
   }
 
-  test("legacy index without the inline norm stream: fallback join is rank-identical") {
+  test("legacy index without the inline norm stream: load fails naming the index directory") {
     // indexes written before the lenBytes stream existed lack the column;
-    // every scoring path must fall back to the (docId, lenByte) docstore
-    // join with identical results. Simulate one by stripping the column.
+    // no scoring path reads norms any other way, so loading one must fail
+    // with an error that says which index to rebuild. Simulate one by
+    // stripping the column.
     built
     val legacyDir = java.nio.file.Files.createTempDirectory("graft_ix_legacy").toString
     try {
@@ -1431,28 +1508,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         new java.io.File(tmp), new java.io.File(legacyDir))
       spark.read.parquet(s"$tmp/postings").drop("lenBytes")
         .write.mode("overwrite").parquet(s"$legacyDir/postings")
-      val legacy = Searcher.load(spark, legacyDir)
-      assert(ix.hasInlineLen, "current builds must carry the inline norm stream")
-      assert(!legacy.hasInlineLen)
-      // per-query path: conjunctive, disjunctive, and phrase
-      Seq(Seq("if", "return"), Seq("hash", "seed", "mask")).foreach { q =>
-        val a = Searcher.search(ix, q, 10).collect().sortBy(_.rank)
-        val b = Searcher.search(legacy, q, 10).collect().sortBy(_.rank)
-        assert(a.map(h => (h.docId, h.score)).toSeq == b.map(h => (h.docId, h.score)).toSeq,
-          s"legacy fallback diverges for $q")
-      }
-      val po = Searcher.search(ix, Seq("if", "return"), 10, phrase = true)
-        .collect().sortBy(_.rank)
-      val pl = Searcher.search(legacy, Seq("if", "return"), 10, phrase = true)
-        .collect().sortBy(_.rank)
-      assert(po.map(h => (h.docId, h.score)).toSeq == pl.map(h => (h.docId, h.score)).toSeq)
-      // batched path
-      val qs = TestQueries.mix.zipWithIndex.map { case (q, i) => (i, q) }
-      val ba = Searcher.searchAll(ix, qs, 10).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sortBy(x => (x._1, x._2))
-      val bb = Searcher.searchAll(legacy, qs, 10).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sortBy(x => (x._1, x._2))
-      assert(ba.toSeq == bb.toSeq, "legacy fallback diverges on the batched path")
+      val err = intercept[IllegalArgumentException](Searcher.load(spark, legacyDir))
+      assert(err.getMessage.contains(legacyDir) && err.getMessage.contains("lenBytes"),
+        err.getMessage)
+      assert(Searcher.load(spark, tmp).nDocs == NDocs) // the current build loads
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacyDir))
     }

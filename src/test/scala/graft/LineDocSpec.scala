@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference's OWN fixtures, loaded byte-for-byte through the linedoc
   * reader, indexed with the real distributed build, and searched — parity
   * asserted against the in-JVM oracle fed the same parsed groups and the
-  * reference's BodyLength() norms. */
+  * reference's BodyLength() norms. The 3-doc golden is inlined; the wiki
+  * sample is read from a reference checkout when one is present. */
 class LineDocSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val fixtures = "/root/reference/src/qq_mem/src/testdata"
@@ -27,24 +28,44 @@ class LineDocSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
-  test("parses the reference's 3-doc iterator fixture exactly") {
-    assume(new java.io.File(s"$fixtures/iter_test_3_docs").exists())
-    val docs = LineDoc.read(s"$fixtures/iter_test_3_docs")
+  test("inline iter_test_3_docs_tf golden: exact parse and search parity") {
+    // the reference's `iter_test_3_docs_tf` fixture, verbatim (FIXTURES.md)
+    val golden = Seq(
+      "FIELDS_HEADER_INDICATOR###\tdoctitle\tbody\ttokenized\toffsets\tpositions",
+      "doc_0\ta\ta\t0,1;.\t0;.",
+      "doc_1\ta a b\ta b\t0,1;2,3;.4,5;.\t0;1;.2;.",
+      "doc_2\ta b c\ta b c\t0,1;.2,3;.4,5;.\t0;.1;.2;.")
+    val path = s"$tmp/iter_test_3_docs_tf"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      golden.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val docs = LineDoc.read(path)
+    assert(docs.map(_.docId) == Seq(0, 1, 2))
     assert(docs.map(_.title) == Seq("doc_0", "doc_1", "doc_2"))
-    assert(docs(0).groups.map(_._1) == Seq("a"))
     assert(docs(1).groups.map(_._1) == Seq("a", "b"))
-    assert(docs(2).groups.map(_._1) == Seq("a", "b", "c"))
-    assert(docs(2).groups(1)._2.toSeq == Seq(1)) // position of b
-    assert(docs(2).groups(1)._3.toSeq == Seq((2, 3))) // offsets of b
+    assert(docs(1).groups(0)._3.toSeq == Seq((0, 1), (2, 3))) // offsets of a
     assert(docs(2).bodyLength == 3)
-    // the tf fixture has repeated terms -> multi-position groups
-    val tfDocs = LineDoc.read(s"$fixtures/iter_test_3_docs_tf")
-    assert(tfDocs.exists(_.groups.exists(_._2.length > 1)),
-      "expected a multi-position (tf > 1) group in the tf fixture")
+    val oracle = LineDoc.oracleIndex(docs)
+    assert(oracle.postings("a").map(p => (p._1, p._2)).toSeq == Seq((0, 1), (1, 2), (2, 1)))
+
+    val ixDir = s"$tmp/iter_test_3_docs_tf_index"
+    LineDoc.buildIndex(spark, path, ixDir, partitions = 2)
+    val ix = Searcher.load(spark, ixDir)
+    assert(ix.nDocs == 3 && math.abs(ix.avgLen - oracle.avgLen) < 1e-12)
+    Seq(Seq("a"), Seq("b"), Seq("a", "b"), Seq("b", "c"), Seq("a", "zzz")).foreach { terms =>
+      val want = graft.core.Oracle.search(oracle, terms, 10)
+      val got = Searcher.search(ix, terms, 10).collect().sortBy(_.rank)
+      assert(got.map(_.docId).toSeq == want.map(_.docId), s"terms $terms")
+      got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g.score - w.score) < 1e-12, s"terms $terms doc ${g.docId}") }
+    }
+    val gotP = Searcher.search(ix, Seq("a", "b"), 10, phrase = true).collect().sortBy(_.rank)
+    val wantP = graft.core.Oracle.search(oracle, Seq("a", "b"), 10, phrase = true)
+    assert(gotP.map(_.docId).toSeq == wantP.map(_.docId) && gotP.nonEmpty)
   }
 
   test("search parity vs the oracle on the reference's wiki sample") {
-    assume(new java.io.File(s"$fixtures/line_doc_with_positions").exists())
+    assume(new java.io.File(s"$fixtures/line_doc_with_positions").exists(),
+      s"the reference's wiki linedoc sample is not present under $fixtures")
     val path = s"$fixtures/line_doc_with_positions"
     val docs = LineDoc.read(path)
     assert(docs.nonEmpty)

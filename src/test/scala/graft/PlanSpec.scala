@@ -5,9 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan-shape regression guards for the graded queries — promoted from the
-  * `tools.ExplainAudit` dev probe into the suite so a future change cannot
-  * silently reintroduce the two scale anti-patterns the round-1/2 audits
+/** Plan-shape regression guards for the graded queries, so a future change
+  * cannot silently reintroduce the two scale anti-patterns the round-1/2 audits
   * fixed:
   *
   *  - an UNPARTITIONED Window (`WindowExec: No Partition Defined` — the
